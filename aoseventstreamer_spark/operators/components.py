@@ -47,6 +47,8 @@ LSH already bounded — not the corpus. Each round's shuffle carries
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -118,9 +120,13 @@ def connected_components(
     by ONE localCheckpoint job that simultaneously evaluates the
     block's convergence metric via ``observe()`` — see the module
     docstring for why this beats a per-round count() protocol.
-    ``stats`` (if given) receives {"rounds", "blocks"}: blocks is the
-    number of driver synchronization points, the quantity the
-    O(log n) job-count guarantee is stated over.
+    ``stats`` (if given) receives {"rounds", "blocks", "converged"}:
+    blocks is the number of driver synchronization points, the quantity
+    the O(log n) job-count guarantee is stated over; ``converged`` is
+    False when ``max_iter`` ran out while the last round still changed
+    labels — the result is then NOT the component labelling, and a
+    ``RuntimeWarning`` says so (read off the same observe() metric, no
+    extra job).
     """
     from pyspark.sql import Observation
 
@@ -150,6 +156,8 @@ def connected_components(
     if adj.isEmpty():
         # AQE's empty-relation propagation can prune Observation nodes
         # (observed trap), so the empty graph exits before the loop
+        if stats is not None:
+            stats.update(rounds=0, blocks=0, converged=True)
         return adj.select("node", F.col("nbr").alias("component"))
 
     # label(v) starts as min(v, min neighbor) — one round for free;
@@ -161,6 +169,7 @@ def connected_components(
 
     done = 0
     blocks = 0
+    converged = False
     while done < max_iter:
         steps = min(checkpoint_every, max_iter - done)
         cur = labels
@@ -178,10 +187,17 @@ def connected_components(
         labels = observed.select("node", "component").localCheckpoint()
         if (obs.get.get("changed") or 0) == 0:
             # the block's LAST round was a no-op: fixed point reached
+            converged = True
             break
+    if not converged:
+        warnings.warn(
+            f"connected_components hit max_iter={max_iter} before a "
+            "fixed point; labels are unconverged (raise max_iter)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     if stats is not None:
-        stats["rounds"] = done
-        stats["blocks"] = blocks
+        stats.update(rounds=done, blocks=blocks, converged=converged)
     return labels
 
 

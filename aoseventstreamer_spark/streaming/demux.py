@@ -2,24 +2,35 @@
 
 Per-group streaming queries (streaming/groups.py) are the faithful
 reference shape, but at thousands of groups the N-scans cost dominates.
-The demux job amortizes: a single ``readStream`` over the event log;
-each micro-batch is matched against ALL registered groups in ONE pass
-— every event enumerates its candidate query subjects (bounded-depth
-grammar ⇒ ≤ 4 keys, subjects.candidate_query_subjects) which
-equi-join, broadcast, against the group dimension. Each group then
-receives only its slice of the (persisted, already-matched) frame;
-groups with no matches this batch all receive ONE shared empty frame
-(``runner.empty_frame``, built once at start — no per-group plan
-work), so per-batch work is one join job plus one cheap job per
-*matching* group — flat in the number of registered groups. Chunk ids stay
-per-group (batch_id), the checkpoint is shared — commit happens only
-after ALL groups accepted the batch, preserving (coarsening) the
-at-least-once contract: a failed deliver for any group replays the
-batch for all.
+The demux job amortizes: a single ``readStream`` over the event log,
+and each micro-batch is matched against ALL registered groups in ONE
+Spark job — every event enumerates its candidate query subjects
+(bounded-depth grammar => <= 4 keys, subjects.candidate_query_subjects),
+rows whose key is some group's ``filter_subject`` are kept, and the
+result is collected to the driver as one Arrow table. The driver sorts
+it by key, cuts it into runs, and wraps each run in a
+``createDataFrame(arrow_slice)`` — a ``LocalRelation``, so a
+subscriber's actions on its chunk are planned and answered on the
+driver with no Spark job. Groups registered on the same key share one
+frame; groups with no matches this batch all receive ONE shared empty
+frame (``runner.empty_frame``, built once at start). Per-batch cluster
+work is therefore one job, flat in the number of registered AND
+matching groups (A/B against the earlier one-job-per-matching-group
+design: docs/SCALE.md, "Read path").
 
-That coarsening is the deliberate trade: one scan + one checkpoint vs
-per-group offsets. Groups that need isolated progress stay on
-``StreamGroupManager``; fleets of cheap subscribers ride the demux.
+Driver memory: the collected table holds at most 4 rows per event of
+the batch (one per candidate key that some group registered), however
+many groups share a key — the bound is the grammar depth, not the
+fleet size. Size batches (``max_files_per_trigger``, commit size) so
+that 4x a batch fits the driver comfortably.
+
+Chunk ids stay per-group (batch_id), the checkpoint is shared — commit
+happens only after ALL groups accepted the batch, preserving
+(coarsening) the at-least-once contract: a failed deliver for any
+group replays the batch for all. That coarsening is the deliberate
+trade: one scan + one checkpoint vs per-group offsets. Groups that
+need isolated progress stay on ``StreamGroupManager``; fleets of cheap
+subscribers ride the demux.
 """
 
 from __future__ import annotations
@@ -30,6 +41,7 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,7 +62,6 @@ class DemuxRunner:
         spark: SparkSession,
         events_path: str,
         checkpoint: str,
-        slice_partitions: int | None = None,
         deliver_concurrency: int | None = None,
         log_format: str = "parquet",
     ):
@@ -78,33 +89,19 @@ class DemuxRunner:
         self.checkpoint = checkpoint
         self.log_format = log_format
         # Per-group deliveries within one batch run CONCURRENTLY from a
-        # bounded driver pool: each deliver's action is tiny (a pruned
-        # slice of the cached batch) but pays a serial py4j+scheduling
-        # floor (~75 ms measured at r6), which serialized a 1000-group
-        # fleet into ~75 s per batch — far over the 250 ms trigger.
-        # Spark's scheduler accepts concurrent job submission from
-        # driver threads, so N cheap actions overlap into ~floor/N
-        # marginal. Contract change: deliver callbacks must be
-        # thread-safe ACROSS GROUPS within a batch (a single group's
-        # deliveries stay ordered across batches — foreachBatch is
-        # serial); failure semantics are unchanged — every deliver is
-        # awaited and the first error re-raises after the pool drains,
-        # so a partial failure still fails the batch and replays it for
-        # all groups. Set deliver_concurrency=1 for strict in-order
-        # single-threaded delivery.
+        # bounded driver pool: each deliver's action is tiny (a local
+        # chunk, or the shared empty frame) but pays a serial py4j +
+        # planning floor, which a 1000-group fleet would otherwise
+        # serialize into seconds per batch — far over the 250 ms
+        # trigger. Contract: deliver callbacks must be thread-safe
+        # ACROSS GROUPS within a batch (a single group's deliveries
+        # stay ordered across batches — foreachBatch is serial); every
+        # deliver is awaited and the first error re-raises after the
+        # pool drains, so a partial failure still fails the batch and
+        # replays it for all groups. Set deliver_concurrency=1 for
+        # strict in-order single-threaded delivery.
         self.deliver_concurrency = deliver_concurrency or min(
             16, os.cpu_count() or 4
-        )
-        # Partition count of the cached per-batch matched frame. Every
-        # DELIVERING group's slice action schedules one task per cached
-        # partition, so fleet delivery cost is
-        # O(matching_groups × slice_partitions) tasks per batch — while
-        # a single group's slice parallelism is bounded by the same
-        # number. The default biases toward fleet fan-out (the demux's
-        # reason to exist); a deployment with few groups and huge
-        # per-group slices should raise it.
-        self.slice_partitions = slice_partitions or max(
-            4, int(spark.sparkContext.defaultParallelism) // 8
         )
         self._groups: list[DemuxGroup] = []
         self._started = False
@@ -191,77 +188,61 @@ class DemuxRunner:
         self._check_group_set([g.id for g in groups], allow_missed_history)
         self._started = True
 
-        # tiny group dimension, built once; broadcast into every batch's
-        # match join (group_key = the filter_subject verbatim — exact
-        # filters equal the publish subject, subtree filters equal
-        # `<ancestor base>.>`, which is exactly what
-        # candidate_query_subjects enumerates per event)
-        groups_dim = self.spark.createDataFrame(
-            [(g.id, g.filter_subject) for g in groups],
-            "__group_id string, __group_key string",
-        )
+        keys = sorted({g.filter_subject for g in groups})
         event_cols = [f.name for f in schemas.ROUTED_EVENTS_SCHEMA.fields]
 
         def fan_out(batch_df: DataFrame, batch_id: int) -> None:
-            from pyspark.sql import Observation
-
-            obs = Observation()
+            # the batch's ONE Spark job: each event's candidate keys
+            # (filter_subject verbatim — exact filters equal the publish
+            # subject, subtree filters equal `<ancestor base>.>`) that
+            # some group registered, collected to the driver
             matched = (
-                batch_df.withColumn("__key", F.explode(S.candidate_query_subjects()))
-                .join(F.broadcast(groups_dim), F.col("__key") == F.col("__group_key"))
-                .select("__group_id", *event_cols)
-                # co-locate AND sort each group's rows before caching:
-                # the per-group slice filter then prunes cached batches
-                # by their __group_id min/max stats (InMemoryTableScan
-                # partition pruning needs the sort for narrow ranges),
-                # and the bounded partition count caps the tasks each
-                # slice action schedules — together measured 0.8
-                # s/group -> ~0.05 s/group marginal at 1k-group fleets
-                # (tools/demux_scale.py)
-                .repartition(self.slice_partitions, "__group_id")
-                .sortWithinPartitions("__group_id")
-                # which groups have data rides the materialization job
-                # as an observation metric (map-side collect_set into
-                # ONE row, bounded by the registered-group count) — no
-                # per-batch collect() round trip, no distinct shuffle
-                .observe(obs, F.collect_set("__group_id").alias("present"))
+                batch_df.select(
+                    F.explode(S.candidate_query_subjects()).alias("__key"),
+                    *event_cols,
+                )
+                .where(F.col("__key").isin(keys))
+                .toArrow()
+                .sort_by("__key")
             )
-            matched.persist()
-            try:
-                # ONE job fills the cache and computes the metric
-                matched.count()
-                present = set(obs.get["present"])
+            # one Arrow run per matching key, shared by every group on
+            # that key; each becomes a LocalRelation chunk (~20 py4j
+            # round trips apiece, so they are built on the deliver pool)
+            runs = pc.run_end_encode(matched.column("__key").combine_chunks())
+            rows = matched.drop_columns(["__key"])
+            ends = runs.run_ends.to_pylist()
+            slices = {
+                key: rows.slice(begin, end - begin)
+                for key, begin, end in zip(runs.values.to_pylist(), [0, *ends], ends)
+            }
 
-                def deliver_one(g: DemuxGroup) -> None:
-                    if g.id in present:
-                        slice_df = matched.filter(
-                            F.col("__group_id") == g.id
-                        ).drop("__group_id")
-                    else:
-                        # shared empty frame: actions on it cost
-                        # ~nothing, so idle groups add no real work
-                        slice_df = self.empty_frame
-                    g.deliver(batch_id, slice_df)
+            def chunk(arrow_slice):
+                return self.spark.createDataFrame(
+                    arrow_slice, schemas.ROUTED_EVENTS_SCHEMA
+                )
 
-                if self.deliver_concurrency > 1 and len(groups) > 1:
-                    with ThreadPoolExecutor(
-                        max_workers=self.deliver_concurrency,
-                        thread_name_prefix="demux-deliver",
-                    ) as pool:
-                        futures = [pool.submit(deliver_one, g) for g in groups]
-                    # the with-block joined every future; surface the
-                    # FIRST failure (deterministic: registration order)
-                    # so a partial failure fails the whole batch and
-                    # the shared checkpoint replays it for all groups
-                    for fut in futures:
-                        err = fut.exception()
-                        if err is not None:
-                            raise err
-                else:
-                    for g in groups:
-                        deliver_one(g)
-            finally:
-                matched.unpersist()
+            def deliver_one(g: DemuxGroup) -> None:
+                g.deliver(batch_id, chunks.get(g.filter_subject, self.empty_frame))
+
+            if self.deliver_concurrency > 1 and len(groups) > 1:
+                with ThreadPoolExecutor(
+                    max_workers=self.deliver_concurrency,
+                    thread_name_prefix="demux-deliver",
+                ) as pool:
+                    chunks = dict(zip(slices, pool.map(chunk, slices.values())))
+                    futures = [pool.submit(deliver_one, g) for g in groups]
+                # the with-block joined every future; surface the
+                # FIRST failure (deterministic: registration order)
+                # so a partial failure fails the whole batch and
+                # the shared checkpoint replays it for all groups
+                for fut in futures:
+                    err = fut.exception()
+                    if err is not None:
+                        raise err
+            else:
+                chunks = {key: chunk(s) for key, s in slices.items()}
+                for g in groups:
+                    deliver_one(g)
 
         if self.log_format == "tablelog":
             from aoseventstreamer_spark.sources.tablelog_source import (

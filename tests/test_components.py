@@ -164,3 +164,22 @@ def test_resolve_job_count_is_logarithmic(spark):
     # plus adj-checkpoint/isEmpty setup; the old protocol added a
     # convergence count() JOB GROUP per round on top
     assert 0 < len(jobs) <= 14 * stats["blocks"] + 4, (len(jobs), stats)
+
+
+def test_max_iter_cap_reports_unconverged(spark):
+    """Hitting ``max_iter`` before a fixed point must not pass silently:
+    a 33-node path needs ~6 rounds, so a 2-round cap leaves labels
+    unconverged — flagged in stats and warned, off the same observe()
+    metric (no extra job). An uncapped run reports converged=True."""
+    import pytest
+
+    edges = _edges(spark, [(i, i + 1) for i in range(32)])
+    stats: dict = {}
+    with pytest.warns(RuntimeWarning, match="max_iter=2"):
+        comp = _comp_map(connected_components(edges, max_iter=2, stats=stats))
+    assert stats["converged"] is False and stats["rounds"] == 2, stats
+    assert set(comp.values()) != {0}  # genuinely unconverged labels
+
+    stats = {}
+    connected_components(edges, stats=stats)
+    assert stats["converged"] is True, stats

@@ -183,12 +183,17 @@ def test_demux_failed_group_replays_batch(spark, tmp_path, log_dir):
 
 
 def test_demux_single_pass_matches_per_group_filters(spark, tmp_path, log_dir):
-    """The one-pass candidate-key join must deliver exactly what N
-    per-group predicate filters would, across levels and filter modes
-    (VERDICT r1 #2) — and idle groups must get a driver-local empty
-    frame (no per-group job)."""
+    """The one-pass candidate-key match must deliver exactly the rows N
+    per-group predicate filters would — all 11 columns, so the Arrow
+    round trip through the driver keeps ``ts`` (set and null) and the
+    null kind/shared_id/leaf_id — across levels and filter modes
+    (VERDICT r1 #2); two groups on one key receive identical rows, and
+    idle groups get the shared driver-local empty frame."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
     from aoseventstreamer_spark.streaming.demux import DemuxRunner
-    from aoseventstreamer_spark.operators.routing import route_emits
 
     # events across 10 projects, collection-level + project-level mix
     rows = []
@@ -201,19 +206,29 @@ def test_demux_single_pass_matches_per_group_filters(spark, tmp_path, log_dir):
             "relations": [{"project": f"p{i}", "collection": None,
                            "shared_object": None, "object_groups": []}],
         })
-    _route_and_write(spark, rows, log_dir)
+    # microsecond timestamps on even emits, null ts on odd ones
+    raw = spark.createDataFrame(rows, schemas.RAW_EMITS_SCHEMA).withColumn(
+        "ts",
+        F.when(
+            F.col("emit_id") % 2 == 0,
+            F.timestamp_micros(F.lit(1_700_000_000_123_457) + F.col("emit_id")),
+        ),
+    )
+    write_event_log(route_emits(raw, secret="t"), log_dir, partition_by=None)
 
     # 100 groups: subtree + exact at project level, exact at collection
-    # level, plus many groups matching nothing
+    # level, plus many groups matching nothing; "dup0" shares sub0's key
     specs = []
     for i in range(10):
         specs.append((f"sub{i}", f"UPDATES.STORAGE._.p{i}.>"))
         specs.append((f"ex{i}", f"UPDATES.STORAGE._.p{i}._"))
         specs.append((f"col{i}", f"UPDATES.STORAGE._.p{i}._.c0._"))
+    specs.append(("dup0", "UPDATES.STORAGE._.p0.>"))
     for i in range(70):
         specs.append((f"idle{i}", f"UPDATES.STORAGE._.absent{i}.>"))
 
-    got: dict[str, list[str]] = {gid: [] for gid, _ in specs}
+    columns = [f.name for f in schemas.ROUTED_EVENTS_SCHEMA.fields]
+    got: dict[str, Counter] = {gid: Counter() for gid, _ in specs}
     local_empties: list[bool] = []
     runner = DemuxRunner(spark, log_dir, str(tmp_path / "ck_sp"))
     for gid, fs in specs:
@@ -222,19 +237,75 @@ def test_demux_single_pass_matches_per_group_filters(spark, tmp_path, log_dir):
                 # idle groups must all receive THE shared empty frame —
                 # identity proves no per-group plan/job was built
                 local_empties.append(df is runner.empty_frame)
-            got[gid].extend(r.subject for r in df.select("subject").collect())
+            assert df.columns == columns, (gid, df.columns)
+            got[gid].update(tuple(r) for r in df.collect())
         runner.register(gid, fs, deliver)
     q = runner.start(trigger={"availableNow": True})
     q.awaitTermination(240)
 
     log = spark.read.schema(schemas.ROUTED_EVENTS_SCHEMA).parquet(log_dir)
+    assert log.where(F.col("ts").isNotNull()).count() > 0
+    assert log.where(F.col("ts").isNull()).count() > 0
     from aoseventstreamer_spark.streaming.groups import subject_filter
     for gid, fs in specs:
-        expected = sorted(
-            r.subject for r in log.filter(subject_filter(fs)).select("subject").collect()
-        )
-        assert sorted(got[gid]) == expected, (gid, fs)
+        expected = Counter(tuple(r) for r in log.filter(subject_filter(fs)).collect())
+        assert got[gid] == expected, (gid, fs)
+    assert got["dup0"] and got["dup0"] == got["sub0"]
     assert local_empties and all(local_empties)
+
+
+def test_demux_fan_out_jobs_flat_in_matching_groups(spark, tmp_path, log_dir):
+    """Structural gate on the fan-out: a batch costs the same number of
+    Spark jobs whether 2 or 20 groups match it — each matching group's
+    chunk is a driver-local LocalRelation cut from ONE collected Arrow
+    batch, so a subscriber's collect() on it schedules no job."""
+    import time as _time
+
+    from aoseventstreamer_spark.streaming.demux import DemuxRunner
+
+    _route_and_write(
+        spark, [r for i in range(10) for r in _emit_rows(i * 100, f"p{i}", 2)], log_dir
+    )
+    jsc = spark.sparkContext._jsc.sc()
+
+    def run(n_matching: int, tag: str) -> tuple[int, list[str]]:
+        plans: list[str] = []
+        runner = DemuxRunner(spark, log_dir, str(tmp_path / f"ck_{tag}"))
+        for i in range(n_matching):
+            # half project subtrees, half exact collection-level keys
+            fs = (f"UPDATES.STORAGE._.p{i % 10}.>" if i < 10
+                  else f"UPDATES.STORAGE._.p{i % 10}._.c0._")
+
+            def deliver(cid, df):
+                rows = df.collect()
+                if rows:
+                    plans.append(
+                        df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+                    )
+            runner.register(f"g{i}", fs, deliver)
+        for i in range(5):
+            runner.register(f"idle{i}", f"UPDATES.STORAGE._.absent{i}.>",
+                            lambda cid, df: df.collect())
+        jsc.listenerBus().waitUntilEmpty()
+        t0 = int(_time.time() * 1000)
+        q = runner.start(trigger={"availableNow": True})
+        q.awaitTermination(120)
+        jsc.listenerBus().waitUntilEmpty()
+        t1 = int(_time.time() * 1000)
+        jobs = jsc.statusStore().jobsList(None)
+        n_jobs = sum(
+            1
+            for k in range(jobs.size())
+            if jobs.apply(k).submissionTime().isDefined()
+            and t0 <= jobs.apply(k).submissionTime().get().getTime() <= t1
+        )
+        return n_jobs, plans
+
+    jobs_2, plans_2 = run(2, "two")
+    jobs_20, plans_20 = run(20, "twenty")
+    assert len(plans_2) == 2 and len(plans_20) == 20
+    assert set(plans_2 + plans_20) == {"LocalRelation"}
+    assert jobs_2 == jobs_20, (jobs_2, jobs_20)
 
 
 def test_demux_deliveries_overlap_within_batch(spark, tmp_path, log_dir):

@@ -1,12 +1,13 @@
 """Demux fleet-scale probe (VERDICT r5 item 6): drive DemuxRunner with
-hundreds-to-thousands of registered groups through one cached
-micro-batch pass and measure the per-group marginal cost.
+hundreds-to-thousands of registered groups through one micro-batch
+pass and measure the per-group marginal cost.
 
 docs/SCALE.md claims the demux shape is flat in registered groups:
-per batch, ONE candidate-key join serves every group, plus one cheap
-slice job per *matching* group and a shared driver-local empty frame
-for idle ones. This probe measures that claim instead of asserting it
-rhetorically:
+per batch, ONE Spark job matches every group and collects the matched
+rows to the driver as Arrow; each matching key's chunk is a
+driver-local LocalRelation (no Spark job per matching group) and idle
+groups share one driver-local empty frame. This probe measures that
+claim instead of asserting it rhetorically:
 
 - a routed event log over P projects (collection-level events) is
   written once;
@@ -15,22 +16,23 @@ rhetorically:
   that match nothing (idle fleet), one availableNow pass, wall time;
 - the regression assertion: the marginal cost per additional group —
   (t(G_max) - t(G_min)) / (G_max - G_min) — must stay under
-  MARGINAL_BUDGET_S for BOTH fleets. The marginal is dominated by the
-  per-deliver driver action overhead (~65 ms py4j floor per
-  subscriber count()), constant and data-independent; the join itself
-  is one pass regardless of G. Idle groups see the shared
+  MARGINAL_BUDGET_S for BOTH fleets. The marginal is the per-group
+  driver work: building a matching key's chunk (createDataFrame from
+  its Arrow slice) and the subscriber's own count() on a local plan,
+  spread over the bounded delivery pool. Idle groups see the shared
   Catalyst-folded empty frame (a LocalRelation, not an
   RDD-with-32-empty-partitions — that construction made every idle
   count a 32-task job).
 
 Usage: python tools/demux_scale.py [G ...]   (default: 100 500 1000)
 Prints one JSON line per (fleet kind, G) — wall time plus JVM heap
-in use after the pass (the driver holds the group dim, the shared
-empty frame, and G callback closures; the 16-thread delivery pool is
-bounded, so queueing, not memory, is what grows with G) — and exits
-nonzero if the marginal-cost assertion fails. The project count
-scales with the largest requested fleet so every matching group has
-a real slice to receive (r8: probed at 10k groups).
+in use after the pass (the driver holds the batch's matched rows, at
+most 4 per event, their chunks, the shared empty frame and G callback
+closures; the delivery pool is bounded, so queueing is what grows
+with G) — and exits nonzero if the marginal-cost assertion fails.
+The project count scales with the largest requested fleet so every
+matching group has a real slice to receive (r8: probed at 10k
+groups).
 """
 
 from __future__ import annotations
@@ -50,9 +52,10 @@ from aoseventstreamer_spark.operators.routing import route_emits, write_event_lo
 from aoseventstreamer_spark.session import get_spark
 from aoseventstreamer_spark.streaming.demux import DemuxRunner
 
-# per-group marginal wall budget (local[32], noisy host): measured
-# 8 ms matching / 3 ms idle at 1000 groups after r7's concurrent
-# delivery pool (was 75/28 ms serial); 40 ms = 5x noise headroom
+# per-group marginal wall budget (noisy host): measured 8 ms matching
+# / 3 ms idle at local[32] after r7's concurrent delivery pool (was
+# 75/28 ms serial); 25 ms matching / 12 ms idle at local[4] with the
+# driver-local Arrow chunks (docs/SCALE.md); 40 ms = noise headroom
 MARGINAL_BUDGET_S = 0.04
 EVENTS_PER_PROJECT = 5
 
