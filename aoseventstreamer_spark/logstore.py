@@ -7,14 +7,16 @@ local). The ONE primitive the format needs from storage is an atomic
 "publish manifest N exactly once" (the commit CAS). That primitive is
 spelled differently per store family:
 
-- **HDFS / local FS** (``HadoopLogStore``, the default): tmp-write +
-  rename-to-version, serialized through a ``.commit.lock`` file
-  (rename(2) overwrites on POSIX, so the bare rename is not a CAS
-  there). On HDFS the lock is ``createNewFile`` (namenode-atomic);
-  on ``file:`` paths ``createNewFile``'s default implementation is a
-  NON-atomic exists-then-create, so the lock instead routes through
-  the same ``O_CREAT|O_EXCL`` open ``PythonFSLogStore`` uses — the
-  two committer families contend on one lock file with one atomic
+- **HDFS / local FS** (``HadoopLogStore`` over py4j,
+  ``PythonFSLogStore`` in plain Python for ``file:`` tables — the
+  TableLog default there): tmp-write + rename-to-version, serialized
+  through a ``.commit.lock`` file (rename(2) overwrites on POSIX, so
+  the bare rename is not a CAS there). On HDFS the lock is
+  ``createNewFile`` (namenode-atomic); on ``file:`` paths
+  ``createNewFile``'s default implementation is a NON-atomic
+  exists-then-create, so the lock instead routes through the same
+  ``O_CREAT|O_EXCL`` open ``PythonFSLogStore`` uses — the two
+  committer families contend on one lock file with one atomic
   primitive. This is the protocol tablelog shipped with.
 - **S3-class object stores** (``ObjectStoreLogStore``): there is NO
   rename and NO exclusive-create-file — the store's atomic primitive
@@ -522,8 +524,11 @@ class PythonFSLogStore(LogStore):
     """Plain-Python (no JVM) ``file:`` log store — the protocol the
     JVM ``HadoopLogStore`` speaks, byte-compatible on a shared local
     directory: O_EXCL ``.commit.lock`` serializing a tmp-write +
-    rename CAS, stale locks stolen after 60 s. Used by the native
-    data source's committer so executors need no JVM access."""
+    rename CAS, stale locks stolen after 60 s, and the Hadoop
+    ``.crc`` sidecar dropped with any file it overwrites or deletes.
+    ``TableLog``'s default on ``file:`` tables (no py4j round trip per
+    log call), and the native data source's committer, so executors
+    need no JVM access."""
 
     def __init__(self, table_path: str):
         self.log_dir = os.path.join(_strip_scheme(table_path), LOG_DIR)
@@ -575,6 +580,7 @@ class PythonFSLogStore(LogStore):
             os.unlink(self._path(version))
         except FileNotFoundError:
             pass
+        self._drop_crc(_manifest_key(version))
 
     def _aux_path(self, name: str) -> str:
         return os.path.join(self.log_dir, name)
@@ -596,10 +602,11 @@ class PythonFSLogStore(LogStore):
 
     def _drop_crc(self, name: str) -> None:
         # mixed-committer interop: Hadoop's ChecksumFileSystem leaves a
-        # `.{name}.crc` sidecar when the JVM store wrote this aux file;
-        # a plain-Python overwrite would leave the stale checksum in
-        # place and every subsequent JVM read of the pointer would fail
-        # verification and read as "no pointer" (r9 test finding)
+        # `.{name}.crc` sidecar when the JVM store wrote this file (aux
+        # or manifest); a plain-Python overwrite would leave the stale
+        # checksum in place and every subsequent JVM read of the
+        # pointer would fail verification and read as "no pointer"
+        # (r9 test finding), and a plain-Python delete would orphan it
         try:
             os.unlink(os.path.join(self.log_dir, f".{name}.crc"))
         except OSError:
@@ -724,8 +731,10 @@ class ObjectStoreLogStore(LogStore):
 
 
 class HadoopLogStore(LogStore):
-    """The JVM-FS log store tablelog shipped with (HDFS/local):
-    tmp-write + rename CAS under a ``.commit.lock``. The lock
+    """The JVM-FS log store tablelog shipped with: ``TableLog``'s
+    default on every non-``file:`` Hadoop scheme (HDFS), and usable on
+    local tables beside ``PythonFSLogStore`` (one lock, one manifest
+    format). Tmp-write + rename CAS under a ``.commit.lock``. The lock
     primitive is chosen by filesystem scheme: on HDFS,
     ``createNewFile`` (atomic in the namenode); on ``file:`` paths
     the O_CREAT|O_EXCL open shared with ``PythonFSLogStore`` —

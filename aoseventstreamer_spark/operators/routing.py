@@ -31,6 +31,8 @@ only the optional final `partitionBy("project_id")` write re-buckets.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -157,6 +159,62 @@ def subjects_for_relation(
     )
 
 
+# The three projection lists of ``route_emits``, built once per
+# (has_ts, on_unknown) and reused by every later call: rebuilding the
+# ``subjects_for_relation`` tree costs ~1,600 py4j commands per call,
+# reusing it under 100. Columns are JVM objects of one gateway, so the
+# cache is owned by the gateway it was built on (compared by identity)
+# and dropped when a new one appears.
+_PROJECTIONS: tuple[object, dict] = (None, {})
+_PROJECTIONS_LOCK = threading.Lock()
+
+
+def _routing_projections(gateway, has_ts: bool, on_unknown: str) -> tuple:
+    global _PROJECTIONS
+    with _PROJECTIONS_LOCK:
+        if _PROJECTIONS[0] is not gateway:
+            _PROJECTIONS = (gateway, {})
+        built = _PROJECTIONS[1]
+        key = (has_ts, on_unknown)
+        if key not in built:
+            built[key] = _build_projections(has_ts, on_unknown)
+        return built[key]
+
+
+def _build_projections(has_ts: bool, on_unknown: str) -> tuple:
+    emit = [F.col(c) for c in ("emit_id", "event_resource", "resource_id", "event_type")]
+    explode_relations = [
+        *emit,
+        (F.col("ts") if has_ts else F.lit(None).cast("timestamp")).alias("ts"),
+        F.explode(F.col("relations")).alias("relation"),
+    ]
+    fan_out = [
+        *emit,
+        F.col("ts"),
+        F.inline(
+            subjects_for_relation(
+                F.col("event_resource"),
+                F.col("resource_id"),
+                F.col("relation"),
+                on_unknown=on_unknown,
+            )
+        ),
+    ]
+    # EventNotificationMessage projection (natsio.rs:67-74): payload is
+    # {resource, updated_type, resource_id}; we keep it as typed columns
+    # (columnar) rather than opaque protobuf bytes.
+    routed = [
+        *[F.col(c) for c in ("subject", "project_id", "collection_id", "kind",
+                             "shared_id", "leaf_id")],
+        F.col("event_resource").alias("resource"),
+        F.col("event_type").alias("updated_type"),
+        F.col("resource_id"),
+        F.col("emit_id").alias("seq"),
+        F.col("ts"),
+    ]
+    return explode_relations, fan_out, routed
+
+
 def route_emits(
     raw_emits: DataFrame, secret: str | None = None, on_unknown: str = "drop"
 ) -> DataFrame:
@@ -172,47 +230,10 @@ def route_emits(
     df = raw_emits
     if secret is not None:
         df = filter_token(df, secret)
-
-    has_ts = "ts" in df.columns
-    rel = df.select(
-        F.col("emit_id"),
-        F.col("event_resource"),
-        F.col("resource_id"),
-        F.col("event_type"),
-        (F.col("ts") if has_ts else F.lit(None).cast("timestamp")).alias("ts"),
-        F.explode(F.col("relations")).alias("relation"),
+    explode_relations, fan_out, routed = _routing_projections(
+        df.sparkSession.sparkContext._gateway, "ts" in df.columns, on_unknown
     )
-    fanned = rel.select(
-        "emit_id",
-        "event_resource",
-        "resource_id",
-        "event_type",
-        "ts",
-        F.inline(
-            subjects_for_relation(
-                F.col("event_resource"),
-                F.col("resource_id"),
-                F.col("relation"),
-                on_unknown=on_unknown,
-            )
-        ),
-    )
-    # EventNotificationMessage projection (natsio.rs:67-74): payload is
-    # {resource, updated_type, resource_id}; we keep it as typed columns
-    # (columnar) rather than opaque protobuf bytes.
-    return fanned.select(
-        "subject",
-        "project_id",
-        "collection_id",
-        "kind",
-        "shared_id",
-        "leaf_id",
-        F.col("event_resource").alias("resource"),
-        F.col("event_type").alias("updated_type"),
-        "resource_id",
-        F.col("emit_id").alias("seq"),
-        "ts",
-    )
+    return df.select(*explode_relations).select(*fan_out).select(*routed)
 
 
 def write_event_log(

@@ -188,20 +188,23 @@ class DemuxRunner:
         self._check_group_set([g.id for g in groups], allow_missed_history)
         self._started = True
 
-        keys = sorted({g.filter_subject for g in groups})
-        event_cols = [f.name for f in schemas.ROUTED_EVENTS_SCHEMA.fields]
+        # each event's candidate keys (filter_subject verbatim — exact
+        # filters equal the publish subject, subtree filters equal
+        # `<ancestor base>.>`) and the registered-key match, built ONCE
+        # per start: `isin` sends one literal per registered key, so a
+        # per-batch build would grow with the fleet
+        keyed = [
+            F.explode(S.candidate_query_subjects()).alias("__key"),
+            *[F.col(f.name) for f in schemas.ROUTED_EVENTS_SCHEMA.fields],
+        ]
+        registered = F.col("__key").isin(sorted({g.filter_subject for g in groups}))
 
         def fan_out(batch_df: DataFrame, batch_id: int) -> None:
-            # the batch's ONE Spark job: each event's candidate keys
-            # (filter_subject verbatim — exact filters equal the publish
-            # subject, subtree filters equal `<ancestor base>.>`) that
-            # some group registered, collected to the driver
+            # the batch's ONE Spark job: the candidate keys some group
+            # registered, collected to the driver
             matched = (
-                batch_df.select(
-                    F.explode(S.candidate_query_subjects()).alias("__key"),
-                    *event_cols,
-                )
-                .where(F.col("__key").isin(keys))
+                batch_df.select(*keyed)
+                .where(registered)
                 .toArrow()
                 .sort_by("__key")
             )

@@ -117,6 +117,7 @@ from aoseventstreamer_spark.logstore import (
     CommitConflict,
     HadoopLogStore,
     LogStore,
+    PythonFSLogStore,
     checkpoint_name,
     checkpoint_versions,
     read_checkpoint,
@@ -788,12 +789,26 @@ class TableLog:
         # driver metadata replicated into every checkpoint manifest
         self.stats_columns = stats_columns
         self.max_stats_columns = max_stats_columns
-        # ``log_store`` swaps the COMMIT protocol, not the data I/O:
-        # HadoopLogStore (default, HDFS/local rename-CAS) or
-        # ObjectStoreLogStore (S3-class conditional PUT) — data files
+        self._fs, self._root, self._jvm = _fs(spark, self.path)
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        # ``log_store`` swaps the COMMIT protocol, not the data I/O.
+        # Default: PythonFSLogStore on ``file:`` tables (the same
+        # O_EXCL-lock + rename CAS and manifest bytes as the JVM store,
+        # without a py4j round trip per log call), HadoopLogStore on
+        # every other Hadoop scheme (HDFS rename-CAS). Pass
+        # ObjectStoreLogStore for S3-class conditional PUT — data files
         # are invisible until a manifest names them, so they need no
         # atomic namespace ops on any store (see logstore module doc).
-        self._log: LogStore = log_store or HadoopLogStore(spark, self.path)
+        if log_store is None:
+            if self._fs.getUri().getScheme() == "file":
+                # the JVM's absolute path: a relative table path must
+                # name the same directory for both the data and the log
+                log_store = PythonFSLogStore(
+                    self._fs.makeQualified(self._root).toUri().getPath()
+                )
+            else:
+                log_store = HadoopLogStore(spark, self.path)
+        self._log: LogStore = log_store
         if checkpoint_format not in ("json", "parquet"):
             raise ValueError(
                 f"checkpoint_format must be 'json' or 'parquet', got "
@@ -811,9 +826,6 @@ class TableLog:
         # stale value only costs one CommitConflict + re-resolve; it
         # can never be ahead of the true head.
         self._head_cache: int | None = None
-        self._fs, self._root, self._jvm = _fs(spark, self.path)
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
-        self._log_dir = self._Path(f"{self.path}/{LOG_DIR}")
 
     # ---------- log primitives (delegated to the LogStore) ----------
 

@@ -19,6 +19,10 @@ protocol's own loop, no Spark jobs, so the numbers isolate LOG cost):
 4. expire_manifests interop at the largest N: retention drops the
    head-resolve inputs and the next commits stay flat.
 
+The default-store curves commit through whatever store ``TableLog``
+picks for a local path (``PythonFSLogStore``), so running this file
+against an older checkout measures that checkout's default committer.
+
 Usage: python tools/tablelog_logscale_probe.py [max_commits]
 (default 100_000; the driver-facing table in RESULTS.md was produced
 with the default).
@@ -36,7 +40,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aoseventstreamer_spark import get_spark  # noqa: E402
 from aoseventstreamer_spark.logstore import (  # noqa: E402
-    PythonFSLogStore,
     checkpoint_name,
     checkpoint_versions,
 )
@@ -107,15 +110,16 @@ def _objectstore(path: str):
 
 
 def probe_commit_curve(
-    spark, sizes: list[int], fmt: str, mk_store=PythonFSLogStore
+    spark, sizes: list[int], fmt: str, mk_store=None
 ) -> list[dict]:
+    """``mk_store=None`` commits through TableLog's default store."""
     path = tempfile.mkdtemp(prefix=f"tl_scale_{fmt}_")
     log = TableLog(
         spark,
         path,
         checkpoint_interval=10,
         checkpoint_format=fmt,
-        log_store=mk_store(path),
+        log_store=mk_store(path) if mk_store else None,
     )
     rows = []
     reached = 0
@@ -145,6 +149,7 @@ def probe_commit_curve(
         rows.append(
             {
                 "format": fmt,
+                "store": type(log._log).__name__,
                 "commits": head,
                 "live_files": len(files),
                 "commit_marginal_ms": round(commit_ms, 3),
@@ -191,7 +196,6 @@ def probe_state_size(spark, n_files: int) -> dict:
             path,
             checkpoint_interval=10,
             checkpoint_format=fmt,
-            log_store=PythonFSLogStore(path),
         )
         # grow the live set to n_files across enough commits to cross
         # a checkpoint boundary with the FULL set live
