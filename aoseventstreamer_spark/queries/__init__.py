@@ -33,10 +33,15 @@ from aoseventstreamer_spark.session import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
+# queries whose build mutates shared state (tablelog DML, IVM, build-on-
+# miss persisted indexes under the temp dir): never run two at once
+STATEFUL: set[str] = set()
 
 
-def query(name: str, oracle: str | None = None):
-    """Register a query; ``oracle=None`` → rows-only driver check."""
+def query(name: str, oracle: str | None = None, stateful: bool = False):
+    """Register a query; ``oracle=None`` → rows-only driver check.
+    ``stateful=True`` declares that building it writes shared state
+    (a tablelog table, an index cache), so gates run it serially."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in QUERIES:
@@ -44,6 +49,8 @@ def query(name: str, oracle: str | None = None):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE_SQL[name] = oracle
+        if stateful:
+            STATEFUL.add(name)
         return fn
 
     return deco

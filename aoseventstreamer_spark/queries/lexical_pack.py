@@ -55,6 +55,7 @@ def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_bm25_persisted",
     oracle=LX.bm25_oracle_sql(_BM25_TERMS),
+    stateful=True,
 )
 def q_bm25_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_bm25_scores answered from a PERSISTED inverted index: the
@@ -224,7 +225,7 @@ def _pinned_ivf_index(spark: SparkSession, sf_dir: str):
     return ann_cache, ann_ident, ann_v
 
 
-@query("q_hybrid_rrf_persisted", oracle=_hybrid_rrf_oracle())
+@query("q_hybrid_rrf_persisted", oracle=_hybrid_rrf_oracle(), stateful=True)
 def q_hybrid_rrf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_hybrid_rrf served ENTIRELY from persisted indexes: the BM25
     leg reads the pinned postings/doclen tables (bm25_from_index) and
@@ -302,7 +303,7 @@ def _hybrid_rrf_ann_oracle() -> str:
     """
 
 
-@query("q_hybrid_rrf_ann", oracle=_hybrid_rrf_ann_oracle())
+@query("q_hybrid_rrf_ann", oracle=_hybrid_rrf_ann_oracle(), stateful=True)
 def q_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual 100 TB hybrid-serving shape (VERDICT r10 item 3):
     BM25 from the pinned inverted index fused with a semantic leg

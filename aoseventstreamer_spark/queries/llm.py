@@ -295,7 +295,7 @@ def q_ann_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.portable_lsh_pairs(emb, emb.filter(F.col("vec_id") < 10), dim=64)
 
 
-@query("q_ann_lsh_persisted", oracle=_PORTABLE_LSH_ORACLE)
+@query("q_ann_lsh_persisted", oracle=_PORTABLE_LSH_ORACLE, stateful=True)
 def q_ann_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_ann_lsh_portable answered from a PERSISTED index (VERDICT r9
     item 3): the band table is materialized ONCE as a tablelog table
@@ -361,7 +361,7 @@ def q_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.portable_ivf_pairs(emb, emb.filter(F.col("vec_id") < 10))
 
 
-@query("q_ann_ivf_persisted", oracle=SIM.portable_ivf_oracle_sql())
+@query("q_ann_ivf_persisted", oracle=SIM.portable_ivf_oracle_sql(), stateful=True)
 def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_ann_ivf_portable answered from PERSISTED coarse-quantizer
     state (VERDICT r9 item 3, IVF tier): Lloyd assignments and
@@ -411,7 +411,7 @@ def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-@query("q_ann_pq_persisted", oracle=SIM.portable_pq_oracle_sql())
+@query("q_ann_pq_persisted", oracle=SIM.portable_pq_oracle_sql(), stateful=True)
 def q_ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_ann_pq_portable answered from PERSISTED PQ state (VERDICT r9
     item 3, final tier): codes and per-subspace codebooks live as

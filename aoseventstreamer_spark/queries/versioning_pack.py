@@ -57,6 +57,7 @@ def _new(docs: DataFrame) -> DataFrame:
                     (n.text, n.source, n.lang) THEN 'changed'
           END IS NOT NULL
     """,
+    stateful=True,
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-to-snapshot corpus diff (operators/merge.snapshot_diff):
@@ -88,6 +89,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT MIN(doc_id) AS doc_id, fp FROM fresh GROUP BY fp
     """,
+    stateful=True,
 )
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental exact-dedup admission
@@ -118,6 +120,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT doc_id, text, lang, source FROM src
     """,
+    stateful=True,
 )
 def q_tablelog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE upsert through the real tablelog write path
@@ -156,6 +159,7 @@ def q_tablelog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN n_chars + 6 ELSE n_chars END AS n_chars
     FROM documents
     """,
+    stateful=True,
 )
 def q_tablelog_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE through the real tablelog write path
@@ -208,6 +212,7 @@ def q_tablelog_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, text || ' [v2]' AS text, lang, 'insert', CAST(3 AS BIGINT)
     FROM v2 WHERE doc_id IN (1, 2, 3)
     """,
+    stateful=True,
 )
 def q_tablelog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Change data feed computed from the commit log
@@ -254,6 +259,7 @@ def q_tablelog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, text, lang FROM documents
     """,
+    stateful=True,
 )
 def q_tablelog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot time travel (tablelog.read(version=...)): after a
@@ -281,6 +287,7 @@ def q_tablelog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, text, lang, n_chars FROM documents
     WHERE NOT (doc_id >= 100 AND doc_id < 200)
     """,
+    stateful=True,
 )
 def q_tablelog_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE through the real tablelog write path
@@ -316,6 +323,7 @@ def q_tablelog_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, text, lang FROM documents
     """,
+    stateful=True,
 )
 def q_tablelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESTORE TABLE TO VERSION (tablelog.restore): after a DELETE and
@@ -358,6 +366,7 @@ def q_tablelog_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, text, lang, n_chars FROM documents
     WHERE NOT (doc_id >= 100 AND doc_id < 200)
     """,
+    stateful=True,
 )
 def q_tablelog_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DELETE through deletion vectors
@@ -414,6 +423,7 @@ def q_tablelog_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 'ge_300', COUNT(*) FROM live WHERE doc_id >= 300
     """,
+    stateful=True,
 )
 def q_tablelog_meta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only COUNT(*) (tablelog.metadata_count): the corpus
@@ -470,6 +480,7 @@ def q_tablelog_meta_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, text, lang, n_chars FROM documents
     """,
+    stateful=True,
 )
 def q_tablelog_native_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The native writer round trip: the corpus written through
@@ -511,6 +522,7 @@ def q_tablelog_native_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, text, lang FROM documents
     WHERE NOT (doc_id < 100 OR doc_id >= 300)
     """,
+    stateful=True,
 )
 def q_tablelog_or_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CNF predicates through the whole tablelog stack: a DELETE whose
@@ -550,6 +562,7 @@ def q_tablelog_or_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (doc_id >= 100 AND doc_id < 200)
     GROUP BY lang
     """,
+    stateful=True,
 )
 def q_tablelog_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface over the table format
@@ -583,6 +596,7 @@ def q_tablelog_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang
     """,
+    stateful=True,
 )
 def q_tablelog_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``VERSION AS OF`` through the SQL surface: after a DELETE and
@@ -621,6 +635,7 @@ def q_tablelog_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(n_chars) AS max_n_chars
     FROM post GROUP BY lang
     """,
+    stateful=True,
 )
 def q_ivm_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MIN/MAX view maintenance
@@ -687,6 +702,7 @@ def q_ivm_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT lang, COUNT(*) AS n, SUM(n_chars) AS sum_chars
     FROM post GROUP BY lang
     """,
+    stateful=True,
 )
 def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental COUNT+SUM view maintenance
@@ -717,6 +733,7 @@ def q_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id, text, lang FROM documents
     """,
+    stateful=True,
 )
 def q_tablelog_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIMESTAMP AS OF time travel (tablelog.read(as_of_timestamp_ms)
@@ -749,6 +766,7 @@ def q_tablelog_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, text AS body, lang FROM documents
     WHERE NOT (doc_id >= 100 AND doc_id < 200)
     """,
+    stateful=True,
 )
 def q_tablelog_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The metadata-only schema-evolution tier (r11): load the corpus

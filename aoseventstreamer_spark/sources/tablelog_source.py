@@ -76,11 +76,11 @@ from aoseventstreamer_spark.logstore import (
     _strip_scheme,
 )
 from aoseventstreamer_spark.tablelog import (
-    _STATS_ATOMIC,
     CommitConflict,
     _stat_encode,
     build_commit_doc,
     resolve_state,
+    stats_columns_for,
 )
 
 
@@ -258,24 +258,26 @@ class _LocalCommitter:
 
 
 class _StatsAgg:
-    """Executor-side exact per-file stats computed DURING the write
-    (the native writer's advantage over append(): no post-write stats
-    job). Same column policy as TableLog._stats_cols_for (first 8
-    atomic columns) and the same encoded forms (_stat_encode)."""
+    """Exact stats of one data file, folded over its Arrow batches
+    while it is written (no post-write stats job). The columns come
+    from ``stats_columns_for``, the policy every write path shares;
+    the stored forms are those of ``TableLog._collect_stats``, Spark's
+    own min/max: ``_stat_encode``d, ``None`` for a column with no
+    non-null value and for a float max over a NaN (Spark orders NaN
+    above every number; Arrow's min_max skips it), empty maps for a
+    0-row file."""
 
-    def __init__(self, schema: T.StructType, max_cols: int = 8):
-        self.cols = []
-        for f in schema.fields:
-            if isinstance(f.dataType, _STATS_ATOMIC):
-                self.cols.append(f.name)
-            if len(self.cols) >= max_cols:
-                break
+    def __init__(self, cols: list[str]):
+        self.cols = list(cols)
         self.num_rows = 0
         self.mins: dict = {}
         self.maxs: dict = {}
+        self.nan_max: set = set()
         self.nulls: dict = {c: 0 for c in self.cols}
 
     def update(self, batch) -> None:
+        """Fold one RecordBatch or Table in."""
+        import pyarrow as pa
         import pyarrow.compute as pc
 
         self.num_rows += batch.num_rows
@@ -287,6 +289,8 @@ class _StatsAgg:
             self.nulls[c] += col.null_count
             if col.null_count == len(col):
                 continue
+            if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py():
+                self.nan_max.add(c)
             mm = pc.min_max(col)
             lo, hi = mm["min"].as_py(), mm["max"].as_py()
             if c not in self.mins or (
@@ -299,12 +303,71 @@ class _StatsAgg:
                 self.maxs[c] = hi
 
     def result(self) -> dict:
+        if not self.num_rows:
+            return {"num_rows": 0, "min": {}, "max": {}, "null_count": {}}
         return {
             "num_rows": int(self.num_rows),
-            "min": {c: _stat_encode(v) for c, v in self.mins.items()},
-            "max": {c: _stat_encode(v) for c, v in self.maxs.items()},
+            "min": {c: _stat_encode(self.mins.get(c)) for c in self.cols},
+            "max": {
+                c: None if c in self.nan_max else _stat_encode(self.maxs.get(c))
+                for c in self.cols
+            },
             "null_count": {c: int(n) for c, n in self.nulls.items()},
         }
+
+
+def write_arrow_files(
+    batches, root: str, rel_dir: str, pcols: list[str], stats_cols: list[str]
+) -> list["_StagedFile"]:
+    """Write Arrow ``batches`` (RecordBatches or Tables) as parquet
+    under ``root/rel_dir``: one file when ``pcols`` is empty, else one
+    file per hive partition value (dynamic partitioning, Spark's
+    writer shape: the partition columns move into the ``k=v`` dir
+    names, escaped by ``_hive_dir``, and re-attach on read). A file
+    opens at its first batch, even an empty one. Stats are folded in
+    as each file is written, over the FULL rows (``stats_cols`` may
+    name partition columns). Shared by the native writer's tasks and
+    ``TableLog.append``'s driver-local commit; ``rel_path``s are
+    relative to ``root``."""
+    import uuid as _uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    open_files: dict[str, tuple] = {}  # part_dir -> (writer, path, agg)
+    for batch in batches:
+        if not pcols:
+            pieces = [("", batch)]
+        else:
+            tbl = batch if isinstance(batch, pa.Table) else pa.Table.from_batches([batch])
+            by_key: dict[tuple, list[int]] = {}
+            keys = zip(*[tbl.column(c).to_pylist() for c in pcols])
+            for i, k in enumerate(keys):
+                by_key.setdefault(k, []).append(i)
+            pieces = [(_hive_dir(pcols, k), tbl.take(ix)) for k, ix in by_key.items()]
+        for part_dir, piece in pieces:
+            data = piece.drop_columns(pcols) if pcols else piece
+            slot = open_files.get(part_dir)
+            if slot is None:
+                sub = os.path.join(root, rel_dir, part_dir)
+                os.makedirs(sub, exist_ok=True)
+                fpath = os.path.join(sub, f"part-{_uuid.uuid4().hex}.parquet")
+                slot = (pq.ParquetWriter(fpath, data.schema), fpath, _StatsAgg(stats_cols))
+                open_files[part_dir] = slot
+            slot[0].write(data)
+            slot[2].update(piece)
+    out = []
+    for part_dir, (writer, fpath, agg) in open_files.items():
+        writer.close()
+        out.append(
+            _StagedFile(
+                os.path.relpath(fpath, root),
+                os.path.getsize(fpath),
+                agg.result(),
+                part_dir,
+            )
+        )
+    return out
 
 
 @dataclass
@@ -364,84 +427,17 @@ class TableLogBatchWriter(DataSourceArrowWriter):
         )
 
     def write(self, iterator) -> _TaskFiles:
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        stage_dir = os.path.join(self.path, f".dsstage-{self.write_id}")
-        os.makedirs(stage_dir, exist_ok=True)
-        if not self.partition_by:
-            name = f"part-{_uuid.uuid4().hex}.parquet"
-            fpath = os.path.join(stage_dir, name)
-            writer = None
-            agg = _StatsAgg(self.schema_)
-            for batch in iterator:
-                if writer is None:
-                    writer = pq.ParquetWriter(fpath, batch.schema)
-                writer.write_table(pa.Table.from_batches([batch]))
-                agg.update(batch)
-            if writer is None:
-                return _TaskFiles([])  # empty task
-            writer.close()
-            return _TaskFiles(
-                [
-                    _StagedFile(
-                        f".dsstage-{self.write_id}/{name}",
-                        os.path.getsize(fpath),
-                        agg.result(),
-                    )
-                ]
+        rel_dir = f".dsstage-{self.write_id}"
+        os.makedirs(os.path.join(self.path, rel_dir), exist_ok=True)
+        return _TaskFiles(
+            write_arrow_files(
+                iterator,
+                self.path,
+                rel_dir,
+                self.partition_by,
+                stats_columns_for(self._data_schema()),
             )
-        # hive-partitioned: ONE staged file per partition value seen by
-        # this task (dynamic partitioning — Spark's own writer shape).
-        # Rows are grouped per batch with an Arrow-side key split; the
-        # partition columns are dropped from the data (they live in the
-        # dir name) and re-attach on read like any hive layout.
-        data_schema = self._data_schema()
-        open_files: dict[str, tuple] = {}  # part_dir -> (writer, path, agg)
-        pcols = self.partition_by
-        for batch in iterator:
-            tbl = pa.Table.from_batches([batch])
-            keys = list(
-                zip(*[tbl.column(c).to_pylist() for c in pcols])
-            )
-            by_key: dict[tuple, list[int]] = {}
-            for i, k in enumerate(keys):
-                by_key.setdefault(k, []).append(i)
-            data_tbl = tbl.drop_columns(pcols)
-            for k, idxs in by_key.items():
-                part_dir = _hive_dir(pcols, k)
-                slot = open_files.get(part_dir)
-                piece = data_tbl.take(idxs)
-                if slot is None:
-                    sub = os.path.join(stage_dir, part_dir)
-                    os.makedirs(sub, exist_ok=True)
-                    fpath = os.path.join(
-                        sub, f"part-{_uuid.uuid4().hex}.parquet"
-                    )
-                    slot = (
-                        pq.ParquetWriter(fpath, piece.schema),
-                        fpath,
-                        _StatsAgg(data_schema),
-                        part_dir,
-                    )
-                    open_files[part_dir] = slot
-                slot[0].write_table(piece)
-                for b in piece.to_batches():
-                    slot[2].update(b)
-        out = []
-        for writer, fpath, agg, part_dir in open_files.values():
-            writer.close()
-            out.append(
-                _StagedFile(
-                    os.path.relpath(fpath, self.path),
-                    os.path.getsize(fpath),
-                    agg.result(),
-                    part_dir,
-                )
-            )
-        return _TaskFiles(out)
+        )
 
     # -- driver side --
 

@@ -92,12 +92,14 @@ q_scan_events/q_replay_all row sets are unchanged when read through
 the format (tests/test_tablelog.py::test_scan_parity_through_format).
 
 Scale notes: manifests are driver-side metadata (KBs per commit; the
-full set only every ``checkpoint_interval`` commits); data moves only
-through executor-side parquet jobs. Listing never walks the data tree
-except in VACUUM (a maintenance job). The single-writer assumption is
-per-COMMIT, not per-table: concurrent appenders serialize through the
-version CAS and retry cheaply (re-list + re-rename; the data files
-they staged are reused verbatim).
+full set only every ``checkpoint_interval`` commits); data moves
+through executor-side parquet jobs, except an append of a frame built
+from driver data, whose rows are already on the driver (the emit
+path: one ``toArrow()`` job, pyarrow files; see ``append``). Listing
+never walks the data tree except in VACUUM (a maintenance job). The
+single-writer assumption is per-COMMIT, not per-table: concurrent
+appenders serialize through the version CAS and retry cheaply
+(re-list + re-rename; the data files they staged are reused verbatim).
 """
 
 from __future__ import annotations
@@ -224,6 +226,52 @@ _STATS_ATOMIC = (
     T.FloatType, T.DoubleType, T.StringType, T.BooleanType,
     T.TimestampType, T.DateType,
 )
+
+
+def stats_columns_for(
+    schema: T.StructType,
+    stats_columns: list[str] | None = None,
+    max_cols: int = 8,
+    logical_to_phys: dict[str, str] | None = None,
+) -> list[str]:
+    """The columns a data file's stats cover, for every write path:
+    an explicit ``stats_columns`` list (logical names, translated to
+    the files' physical names through ``logical_to_phys`` on mapped
+    tables) kept where ``schema`` has it, else the first ``max_cols``
+    atomic columns of ``schema`` (the WRITTEN files' schema)."""
+    if stats_columns is not None:
+        m = logical_to_phys or {}
+        have = set(schema.fieldNames())
+        return [m.get(c, c) for c in stats_columns if m.get(c, c) in have]
+    out = []
+    for f in schema.fields:
+        if isinstance(f.dataType, _STATS_ATOMIC):
+            out.append(f.name)
+        if len(out) >= max_cols:
+            break
+    return out
+
+
+# Types the driver-local append hands to pyarrow: Spark reads the
+# files pyarrow writes for these back as the same type (intervals,
+# NullType, variants and UDTs stay on Spark's writer).
+_ARROW_WRITABLE = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _arrow_writable(dt: T.DataType) -> bool:
+    if isinstance(dt, T.ArrayType):
+        return _arrow_writable(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _arrow_writable(dt.keyType) and _arrow_writable(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return bool(dt.fields) and all(
+            _arrow_writable(f.dataType) for f in dt.fields
+        )
+    return isinstance(dt, _ARROW_WRITABLE)
 
 
 def _stat_encode(v):
@@ -791,6 +839,14 @@ class TableLog:
         self.max_stats_columns = max_stats_columns
         self._fs, self._root, self._jvm = _fs(spark, self.path)
         self._Path = self._jvm.org.apache.hadoop.fs.Path
+        # the JVM's absolute path of a ``file:`` table (a relative
+        # table path must name the same directory for the JVM and for
+        # Python I/O); None on every other scheme
+        self._local_root = (
+            self._fs.makeQualified(self._root).toUri().getPath()
+            if self._fs.getUri().getScheme() == "file"
+            else None
+        )
         # ``log_store`` swaps the COMMIT protocol, not the data I/O.
         # Default: PythonFSLogStore on ``file:`` tables (the same
         # O_EXCL-lock + rename CAS and manifest bytes as the JVM store,
@@ -800,12 +856,8 @@ class TableLog:
         # are invisible until a manifest names them, so they need no
         # atomic namespace ops on any store (see logstore module doc).
         if log_store is None:
-            if self._fs.getUri().getScheme() == "file":
-                # the JVM's absolute path: a relative table path must
-                # name the same directory for both the data and the log
-                log_store = PythonFSLogStore(
-                    self._fs.makeQualified(self._root).toUri().getPath()
-                )
+            if self._local_root is not None:
+                log_store = PythonFSLogStore(self._local_root)
             else:
                 log_store = HadoopLogStore(spark, self.path)
         self._log: LogStore = log_store
@@ -977,11 +1029,15 @@ class TableLog:
             out.append(T.StructField(f.name, f.dataType, f.nullable, md))
         return T.StructType(out)
 
-    def _logical_pcols(self, rel_paths: list[str]) -> list[str]:
+    def _logical_pcols(
+        self, rel_paths: list[str], sch: T.StructType | None = None
+    ) -> list[str]:
         """Hive partition columns of ``rel_paths`` as LOGICAL names
-        (dir segments carry physical names on mapped tables)."""
+        (dir segments carry physical names on mapped tables). ``sch``
+        is the stored schema when the caller already resolved it."""
         phys = self._partition_cols(rel_paths)
-        sch = self.schema()
+        if sch is None:
+            sch = self.schema()
         if not _mapping_active(sch):
             return phys
         inv = {p: l for l, p in _phys_map(sch).items()}
@@ -1010,6 +1066,7 @@ class TableLog:
         operation: str | None = None,
         op_metrics: dict | None = None,
         constraints: dict[str, str] | None = None,
+        _base_state: tuple | None = None,
     ) -> int:
         """Commit one snapshot; returns the new version. ``added``
         entries are {'path': rel, 'size': int}; ``removed`` is rel
@@ -1028,7 +1085,14 @@ class TableLog:
         object store that skips the pointer GET + HEAD + LIST every
         sequential commit paid (r10: 5.82 → ~2.8 requests/commit);
         an explicit ``expected_version`` still raises on loss — that
-        is the serializability contract _commit_or_rebase builds on."""
+        is the serializability contract _commit_or_rebase builds on.
+
+        ``_base_state`` is the resolved state at ``expected_version``
+        when the caller already holds it (``append``): a commit on a
+        checkpoint boundary then builds the checkpoint from it instead
+        of replaying the log again."""
+        if expected_version is None:
+            _base_state = None
         attempts = 0
         while True:
             base = (
@@ -1053,7 +1117,7 @@ class TableLog:
                 op_metrics=op_metrics,
                 constraints=constraints,
                 checkpoint_state=(
-                    self._replay(base)
+                    (_base_state or self._replay(base))
                     if on_boundary and self.checkpoint_format == "json"
                     else None
                 ),
@@ -1086,7 +1150,16 @@ class TableLog:
                     self._log.write_pointer(version, {"format": "json"})
                 else:
                     write_checkpoint(
-                        self._log, version, *self._replay(version)
+                        self._log,
+                        version,
+                        *(
+                            replay_seeded(
+                                [version], lambda _v: doc, version, base,
+                                _base_state,
+                            )
+                            if _base_state is not None
+                            else self._replay(version)
+                        ),
                     )
             except Exception:
                 pass  # derived state; the committed manifest stands
@@ -1157,18 +1230,6 @@ class TableLog:
 
     # ---------- write path ----------
 
-    def _stats_cols_for(self, schema: T.StructType) -> list[str]:
-        if self.stats_columns is not None:
-            have = set(schema.fieldNames())
-            return [c for c in self.stats_columns if c in have]
-        out = []
-        for f in schema.fields:
-            if isinstance(f.dataType, _STATS_ATOMIC):
-                out.append(f.name)
-            if len(out) >= self.max_stats_columns:
-                break
-        return out
-
     def _collect_stats(
         self,
         added: list[dict],
@@ -1183,17 +1244,13 @@ class TableLog:
         (stable across renames — old files' stats stay valid) and a
         user-configured ``stats_columns`` list (logical names) is
         translated via ``logical_to_phys``."""
+        from urllib.parse import unquote
+
         from pyspark.sql import functions as F
 
-        if logical_to_phys and self.stats_columns is not None:
-            have = set(schema.fieldNames())
-            cols = [
-                logical_to_phys.get(c, c)
-                for c in self.stats_columns
-                if logical_to_phys.get(c, c) in have
-            ]
-        else:
-            cols = self._stats_cols_for(schema)
+        cols = stats_columns_for(
+            schema, self.stats_columns, self.max_stats_columns, logical_to_phys
+        )
         if not added or not cols:
             return
         paths = [f"{self.path}/{e['path']}" for e in added]
@@ -1218,9 +1275,12 @@ class TableLog:
             .agg(*aggs)
             .collect()
         )  # bounded: one row per file just written
+        # input_file_name() is a URI: a hive dir value holding '%' or
+        # a space (p=a%2Fb on disk) arrives %-encoded again, so decode
+        # before matching, or the file's stats read as 0 rows
         by_suffix = {}
         for r in rows:
-            by_suffix[r["__f"]] = r
+            by_suffix[unquote(r["__f"])] = r
         for e in added:
             match = None
             for uri, r in by_suffix.items():
@@ -1328,6 +1388,63 @@ class TableLog:
         self._fs.delete(self._Path(stage_root), True)
         return out
 
+    def _driver_local(self, df: DataFrame, partition_by: list[str]) -> bool:
+        """Whether ``append`` can commit ``df`` on the driver: a
+        ``file:`` table; no hive partitioning (Spark's writer splits a
+        partition's rows into one file per input task, and file
+        skipping over a partitioned table leans on that split); column
+        types pyarrow writes the way Spark reads them back; and a frame
+        whose every optimized-plan leaf holds driver data — a
+        ``LocalRelation``, or a ``LogicalRDD`` whose RDD lineage ends
+        only in ``ParallelCollectionRDD``s (what ``createDataFrame`` of
+        a Python list, pandas frame or Arrow table makes). The walk
+        cannot see into the Python functions of a ``PythonRDD`` in
+        that lineage (``createDataFrame(list)`` has one too), so a
+        frame built from ``sc.parallelize(...)`` and Python transforms
+        is collected as well: its rows are whatever those functions
+        yield, not only the parallelized list."""
+        if self._local_root is None or partition_by:
+            return False
+        sch = df.schema
+        names = [n.lower() for n in sch.fieldNames()]
+        if not names or len(set(names)) != len(names):
+            return False  # Spark's writer refuses these; keep its error
+        if not all(_arrow_writable(f.dataType) for f in sch.fields):
+            return False
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+        while leaves.hasNext():
+            leaf = leaves.next()
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LocalRelation":
+                continue
+            if kind != "LogicalRDD":
+                return False
+            stack = [leaf.rdd()]
+            while stack:
+                rdd = stack.pop()
+                deps = rdd.dependencies().iterator()
+                if not deps.hasNext() and (
+                    rdd.getClass().getSimpleName() != "ParallelCollectionRDD"
+                ):
+                    return False
+                while deps.hasNext():
+                    stack.append(deps.next().rdd())
+        return True
+
+    def _write_local(self, df: DataFrame, stats_cols: list[str]) -> list[dict]:
+        """The driver-local write of ``append``: ONE ``toArrow()`` job,
+        then pyarrow writes one parquet file straight into the table
+        root (data files are invisible until a manifest names them, so
+        there is nothing to stage), folding its stats in as it goes.
+        An empty frame still writes one (empty) file, as Spark's writer
+        does."""
+        from aoseventstreamer_spark.sources.tablelog_source import write_arrow_files
+
+        files = write_arrow_files([df.toArrow()], self._local_root, "", [], stats_cols)
+        return [
+            {"path": f.rel_path, "size": f.size, "stats": f.stats} for f in files
+        ]
+
     def append(
         self,
         df: DataFrame,
@@ -1338,8 +1455,32 @@ class TableLog:
         txn_version: int | None = None,
     ) -> int:
         """Write ``df``'s rows as new immutable data files and commit
-        them as one snapshot. The parquet job runs ONCE; only the
-        metadata commit retries on a version race.
+        them as one snapshot. The write runs ONCE; only the metadata
+        commit retries on a version race. The table state is resolved
+        once before the write and once per commit attempt (none when
+        the head has not moved since), and that one state feeds the
+        layout check, the schema merge, the column mapping, the
+        constraints and the txn check.
+
+        Two writes, one commit protocol:
+
+        - **driver-local** (``_driver_local``): an unpartitioned
+          append, on a ``file:`` table, of a frame whose plan reads
+          only driver data — e.g. the ``createDataFrame(list)`` of an
+          emit call routed by ``route_emits`` — is collected with ONE
+          ``toArrow()`` job and written by pyarrow as one file, stats
+          folded in as it writes (``_StatsAgg``). The rows already sit
+          on the driver (in the Python list, pandas frame or
+          ``LocalRelation`` the frame was built from), so collecting
+          them holds the driver to the order of what its caller
+          already holds: the routed rows plus one Arrow copy.
+        - **distributed**: every other frame goes through Spark's
+          parquet writer, a staged promote and one stats job
+          (``_collect_stats``).
+
+        Both give the same rows, the same per-file stats and the same
+        manifest actions; on a table with CHECK constraints both run
+        ``_enforce_constraints`` (one job).
 
         Schema evolution: an append whose columns are a SUPERSET of
         the table schema is accepted with ``merge_schema=True`` (the
@@ -1358,28 +1499,31 @@ class TableLog:
         tablelog sink exactly-once (sources/io.write_stream)."""
         if (txn_app is None) != (txn_version is None):
             raise ValueError("pass txn_app and txn_version together")
-        if txn_app is not None and self.last_txn_version(txn_app) >= int(
-            txn_version
-        ):
-            return self.latest_version()  # replayed batch: no-op
+        txn = (
+            (str(txn_app), int(txn_version)) if txn_app is not None else None
+        )
+        base = self.latest_version()
+        state = self._replay(base)
+        if txn is not None and int(state[2].get(txn[0], -1)) >= txn[1]:
+            return base  # replayed batch: no-op
 
         orig_fields: set | None = None  # stored fields at FIRST derivation
 
-        def derive_schema() -> T.StructType | None:
-            """Validate df against the CURRENT stored schema and return
-            the schema to commit (None = unchanged). Re-run on every
-            commit attempt: a concurrent merge_schema append may have
-            widened the table between our derivation and our commit,
-            and re-committing the PRE-race merge would silently drop
-            the winner's new column from the stored schema (round-8
-            self-review finding; regression-tested in
-            tests/test_advice_r8b.py). The caller's contract is pinned
-            to the schema they DERIVED AGAINST: df must cover every
-            field that existed then (dropping columns stays refused),
-            while columns a concurrent writer added since are fine —
-            this append's files simply read back with them null."""
+        def derive_schema(stored: T.StructType | None) -> T.StructType | None:
+            """Validate df against the stored schema of the state being
+            committed on and return the schema to commit (None =
+            unchanged). Re-run on every commit attempt: a concurrent
+            merge_schema append may have widened the table between our
+            derivation and our commit, and re-committing the PRE-race
+            merge would silently drop the winner's new column from the
+            stored schema (round-8 self-review finding;
+            regression-tested in tests/test_advice_r8b.py). The
+            caller's contract is pinned to the schema they DERIVED
+            AGAINST: df must cover every field that existed then
+            (dropping columns stays refused), while columns a
+            concurrent writer added since are fine — this append's
+            files simply read back with them null."""
             nonlocal orig_fields
-            stored = self.schema()
             if stored is None:
                 return df.schema
             stored_names = set(stored.fieldNames())
@@ -1404,7 +1548,7 @@ class TableLog:
                 "pass merge_schema=True to ADD columns"
             )
 
-        def check_layout() -> None:
+        def check_layout(live: dict, stored: T.StructType | None) -> None:
             """Refuse an append whose hive layout differs from the
             live table's: mixing partition-dir depths under one
             basePath makes Spark's partition discovery silently DROP
@@ -1412,10 +1556,9 @@ class TableLog:
             table read back 10 of 20 rows — not even an error).
             An empty live set accepts any layout; ``overwrite``
             replaces every file so it may change the layout freely."""
-            live = self.snapshot_files()
             if not live:
                 return
-            existing = self._logical_pcols([e["path"] for e in live])
+            existing = self._logical_pcols(list(live), stored)
             if existing != list(partition_by or []):
                 raise ValueError(
                     f"append partition_by={list(partition_by or [])} does "
@@ -1424,14 +1567,17 @@ class TableLog:
                     "overwrite() to change the partitioning"
                 )
 
+        def stored_of(st: tuple) -> T.StructType | None:
+            return T.StructType.fromJson(st[1]) if st[1] else None
+
         from pyspark.sql import functions as F
 
-        check_layout()
-        new_schema = derive_schema()  # validate BEFORE the parquet job
+        stored0 = stored_of(state)
+        check_layout(state[0], stored0)
+        new_schema = derive_schema(stored0)  # validate BEFORE the write
         # column mapping: files store PHYSICAL names. Convert once,
-        # before the parquet job; mint_cache keeps physical names for
+        # before the write; mint_cache keeps physical names for
         # merge_schema's new columns stable across commit retries.
-        stored0 = self.schema()
         mapped = _mapping_active(stored0)
         mint_cache: dict[str, str] = {}
         if mapped:
@@ -1444,41 +1590,55 @@ class TableLog:
             write_df = df.select(
                 *[F.col(c).alias(pm.get(c, c)) for c in df.columns]
             )
-            write_pb = (
-                [pm.get(c, c) for c in partition_by] if partition_by else None
-            )
+            write_pb = [pm.get(c, c) for c in partition_by or []]
             to_logical = [(pm.get(c, c), c) for c in df.columns]
         else:
             pm = None
-            write_df, write_pb, to_logical = df, partition_by, None
-        rel = self._stage_dir()
-        w = write_df.write.mode("overwrite")
-        if write_pb:
-            w = w.partitionBy(*write_pb)
-        w.parquet(f"{self.path}/{rel}")
-        added = self._promote_staged(rel)
-        self._collect_stats(added, write_df.schema, logical_to_phys=pm)
+            write_df, write_pb, to_logical = df, list(partition_by or []), None
+        if self._driver_local(write_df, write_pb):
+            added = self._write_local(
+                write_df,
+                stats_columns_for(
+                    write_df.schema, self.stats_columns,
+                    self.max_stats_columns, pm,
+                ),
+            )
+        else:
+            rel = self._stage_dir()
+            w = write_df.write.mode("overwrite")
+            if write_pb:
+                w = w.partitionBy(*write_pb)
+            w.parquet(f"{self.path}/{rel}")
+            added = self._promote_staged(rel)
+            self._collect_stats(added, write_df.schema, logical_to_phys=pm)
+        validated = state[3]
         self._enforce_constraints(
-            added, write_df.schema, self.constraints(),
-            rename_to_logical=to_logical,
-        )
-        txn = (
-            (str(txn_app), int(txn_version)) if txn_app is not None else None
+            added, write_df.schema, validated, rename_to_logical=to_logical
         )
         for _ in range(max_commit_retries):
-            if txn is not None and self.last_txn_version(txn[0]) >= txn[1]:
+            head = self.latest_version()
+            if head != base:
+                base, state = head, self._replay(head)
+            if txn is not None and int(state[2].get(txn[0], -1)) >= txn[1]:
                 # a concurrent attempt of the SAME batch won the race;
-                # our promoted files are orphans (no manifest references
+                # our written files are orphans (no manifest references
                 # them) — VACUUM sweeps them
-                return self.latest_version()
-            base = self.latest_version()
-            check_layout()  # a racing first-append may have set one
-            new_schema = derive_schema()  # re-merge against the head
+                return base
+            if state[3] != validated:
+                # a constraint landed since the files were validated
+                validated = state[3]
+                self._enforce_constraints(
+                    added, write_df.schema, validated,
+                    rename_to_logical=to_logical,
+                )
+            stored = stored_of(state)
+            check_layout(state[0], stored)  # a racing first-append may have set one
+            new_schema = derive_schema(stored)  # re-merge against the head
             if mapped and new_schema is not None:
                 # re-attach the SAME minted physical names the files
                 # were written under (mint_cache pins them)
                 new_schema = self._attach_mapping(
-                    new_schema, self.schema() or stored0, mint_cache
+                    new_schema, stored or stored0, mint_cache
                 )
             try:
                 # the CAS is pinned so a concurrent attempt of the SAME
@@ -1497,6 +1657,7 @@ class TableLog:
                         "num_added_files": len(added),
                         "num_added_bytes": sum(e["size"] for e in added),
                     },
+                    _base_state=state,
                 )
             except CommitConflict:
                 continue

@@ -78,22 +78,25 @@ def _amplify_inputs(spark, sf_dir: str, factor: int) -> str:
         src, dst = f"{sf_dir}/{name}", f"{out_dir}/{name}"
         base = name[: -len(".parquet")]
         if base == "documents":
+            text = F.when(F.col("rep") == 0, F.col("text")).otherwise(
+                F.concat_ws(
+                    " ",
+                    F.expr("concat_ws(' ', slice(split(text, ' '), 2, 1000000))"),
+                    F.expr("split(text, ' ')[0]"),
+                    F.concat(F.lit("rep"), F.col("rep")),
+                )
+            )
             df = (
                 spark.read.parquet(src)
                 .crossJoin(reps)
                 .select(
                     (F.col("doc_id") * factor + F.col("rep")).alias("doc_id"),
-                    F.when(F.col("rep") == 0, F.col("text"))
-                    .otherwise(
-                        F.concat_ws(
-                            " ",
-                            F.expr("concat_ws(' ', slice(split(text, ' '), 2, 1000000))"),
-                            F.expr("split(text, ' ')[0]"),
-                            F.concat(F.lit("rep"), F.col("rep")),
-                        )
-                    )
-                    .alias("text"),
-                    "lang", "source", "n_chars",
+                    text.alias("text"),
+                    "lang", "source",
+                    # a perturbed replica's text is longer: recount it
+                    F.when(F.col("rep") == 0, F.col("n_chars"))
+                    .otherwise(F.length(text).cast("long"))
+                    .alias("n_chars"),
                 )
             )
         elif base == "events":

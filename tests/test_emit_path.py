@@ -192,3 +192,70 @@ def test_expire_through_default_store_drops_jvm_crc_sidecars(spark, tmp_path):
         assert f".{v:020d}.json.crc" not in left
     assert f".{6:020d}.json.crc" in left  # retained versions keep theirs
     assert TableLog(spark, path).read().count() == 7
+
+
+def _count_resolutions(monkeypatch) -> list:
+    from aoseventstreamer_spark import tablelog as TL
+
+    calls = []
+    resolve = TL.resolve_state
+
+    def counting(*a, **kw):
+        calls.append(a[1])
+        return resolve(*a, **kw)
+
+    monkeypatch.setattr(TL, "resolve_state", counting)
+    return calls
+
+
+@pytest.mark.parametrize("checkpoint_format", ["json", "parquet"])
+def test_append_resolves_the_snapshot_once_per_attempt(
+    spark, tmp_path, monkeypatch, checkpoint_format
+):
+    """An uncontended append resolves the table state at most twice
+    (before the write, and at a commit attempt whose head moved), on
+    both write paths and on a checkpoint commit."""
+    from pyspark.sql import functions as F
+
+    log = TableLog(
+        spark, str(tmp_path / "t"), checkpoint_interval=3,
+        checkpoint_format=checkpoint_format,
+    )
+    local = spark.createDataFrame([(i, f"p{i % 2}") for i in range(6)], "id long, p string")
+    dist = spark.range(6).select("id", F.concat(F.lit("p"), F.col("id") % 2).alias("p"))
+    log.append(local, partition_by=["p"])
+    for v, df in ((2, dist), (3, local), (4, dist)):  # version 3 checkpoints
+        calls = _count_resolutions(monkeypatch)
+        kw = {"txn_app": "w", "txn_version": v} if v % 2 else {}
+        assert log.append(df, partition_by=["p"], **kw) == v
+        monkeypatch.undo()
+        assert len(calls) <= 2, f"version {v}: {len(calls)} resolutions"
+    assert log.read().count() == 24
+    assert log.last_txn_version("w") == 3
+
+
+def test_hadoop_log_store_listing_is_constant_in_py4j(spark, tmp_path, monkeypatch):
+    """``HadoopLogStore`` lists a log in a fixed number of py4j
+    commands and agrees with ``PythonFSLogStore`` on the listing."""
+    root = str(tmp_path / "t")
+    py = PythonFSLogStore(root)
+    for v in range(1, 201):
+        py.write_atomic(v, {"version": v, "actions": []})
+    py.write_aux("00000000000000000100.checkpoint.parquet", b"x")
+    jvm = HadoopLogStore(spark, root)
+    sent = []
+    for _ in range(2):
+        counter = _CommandCounter(spark, monkeypatch)
+        listed = jvm.versions()
+        sent.append(counter.n)
+        monkeypatch.undo()
+    assert listed == py.versions() == list(range(1, 201))
+    assert sent[-1] <= 8, f"versions() sent {sent[-1]} py4j commands for 200 manifests"
+    suffix = ".checkpoint.parquet"
+    assert jvm.list_aux(suffix) == py.list_aux(suffix) == [
+        "00000000000000000100.checkpoint.parquet"
+    ]
+    tmp = os.path.join(root, "_tablelog", ".tmp-stale.json")
+    open(tmp, "w").close()
+    jvm.sweep_tmp(0)
+    assert not os.path.exists(tmp) and jvm.versions() == listed

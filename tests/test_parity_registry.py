@@ -13,14 +13,15 @@ driver applies (must execute and return a stable frame).
 from __future__ import annotations
 
 import os
-import re
 import sys
+import threading
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
+from aoseventstreamer_spark.queries import STATEFUL  # noqa: E402
 from tools.parity import TABLES, rows_to_multiset  # noqa: E402
 
 _QUERIES = E.queries()
@@ -57,6 +58,23 @@ def _check_one(name, spark, sf_dir, con) -> str | None:
     return None
 
 
+def _run_gate(names, check) -> list[str]:
+    """Run ``check`` over ``names``: pure reads pooled on 8 threads,
+    then the queries declared ``stateful`` (``@query(...,
+    stateful=True)``: tablelog DML, IVM, build-on-miss persisted
+    indexes mutate shared warehouse or temp-dir state during the
+    build, which the serial sweep never races) one at a time on the
+    calling thread. Returns the failures."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    pooled = [n for n in names if n not in STATEFUL]
+    serial = [n for n in names if n in STATEFUL]
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        errs = [e for e in pool.map(check, pooled) if e]
+    errs += [e for e in map(check, serial) if e]
+    return errs
+
+
 def test_full_registry_parity_pooled(spark, sf_dir):
     """The DEFAULT-SUITE full-registry oracle gate (VERDICT r11 item 1):
     the parametrized ``-m parity`` sweep below runs one query per test
@@ -67,8 +85,6 @@ def test_full_registry_parity_pooled(spark, sf_dir):
     replays the oracles. The parametrized sweep stays available for
     per-query granularity in reseals (``-m parity`` or the full
     ``-m "slow or not slow"`` run)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     import duckdb
 
     def check(name: str) -> str | None:
@@ -83,17 +99,41 @@ def test_full_registry_parity_pooled(spark, sf_dir):
         finally:
             con.close()
 
-    # STATEFUL queries (tablelog DML / IVM / persisted-index
-    # build-on-miss) mutate shared warehouse or temp-dir state during
-    # the build, which the serial sweep never races — keep them serial;
-    # everything else (pure reads over the fixture parquet) pools.
-    stateful = re.compile(r"tablelog|ivm|persisted|snapshot|incremental")
-    pooled = [n for n in sorted(_QUERIES) if not stateful.search(n)]
-    serial = [n for n in sorted(_QUERIES) if stateful.search(n)]
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        errs = [e for e in pool.map(check, pooled) if e]
-    errs += [e for e in map(check, serial) if e]
+    errs = _run_gate(sorted(_QUERIES), check)
     assert not errs, "\n".join(errs)
+
+
+def test_stateful_queries_run_serially_whatever_their_name():
+    """The gate schedules by the ``stateful`` declaration, not by
+    name: q_hybrid_rrf_ann builds the persisted BM25 and IVF indexes
+    on a miss, though no name pattern marks it, and must run alone,
+    after the pool, on the calling thread."""
+    assert "q_hybrid_rrf_ann" in STATEFUL
+    assert {"q_tablelog_merge", "q_ivm_agg", "q_bm25_persisted"} <= STATEFUL
+    ran = []
+    lock = threading.Lock()
+    active = [0]
+    overlapped = set()
+
+    def check(name):
+        with lock:
+            active[0] += 1
+            if active[0] > 1:
+                overlapped.add(name)
+        threading.Event().wait(0.002)
+        with lock:
+            active[0] -= 1
+            ran.append((name, threading.get_ident()))
+        return None
+
+    names = sorted(_QUERIES)
+    assert _run_gate(names, check) == []
+    me = threading.get_ident()
+    tail = ran[-len(STATEFUL):]
+    assert {n for n, _ in tail} == STATEFUL
+    assert all(t == me for _, t in tail)
+    assert not overlapped & STATEFUL
+    assert len(ran) == len(names)
 
 
 @pytest.fixture(scope="module")
