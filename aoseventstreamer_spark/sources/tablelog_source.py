@@ -4,11 +4,12 @@ snapshot-isolated batch reads and
 ``spark.readStream.format("tablelog").load(path)`` for the
 snapshot-diff stream — with SPARK ITSELF checkpointing the offsets.
 
-Why this exists next to ``tablelog.TableLogStream``: that class is a
-driver loop with its own position file — fine for embedded delivery
-callbacks (the DemuxRunner tier), but it re-implements what Structured
-Streaming already guarantees. This module plugs the manifest log into
-Spark's own micro-batch engine instead:
+This is the only stream over a tablelog table: the manifest log
+plugs into Spark's own micro-batch engine, so Structured Streaming's
+checkpoint holds the stream position (``DemuxRunner`` and
+``StreamGroupManager`` tail tables through it). Readers and writers
+run on ``tablelog.ManifestLog``, the same manifest core ``TableLog``
+uses:
 
 - offsets are ``{"version": N}`` — the snapshot number, NOT file
   paths, so OPTIMIZE commits (``data_change=false``) advance the
@@ -44,12 +45,12 @@ reads/writes from the registering thread, or drive
 tests/test_tablelog_source.py).
 
 Driver/executor I/O here is plain-Python (os/open), so the DATA path
-covers ``file:`` paths; the COMMIT path is pluggable — the manifest
-log speaks the ``logstore.LogStore`` protocol (``PythonFSLogStore``
-default; ``ObjectStoreLogStore`` for S3-class stores, one conditional
-PUT per commit, probed under the same concurrency suite as the JVM
-path — tests/test_logstore.py). The offset/partition/Arrow protocol
-above is storage-agnostic.
+covers ``file:`` paths, and the manifest log is read and committed
+through ``PythonFSLogStore``. ``ManifestLog`` itself takes any
+``logstore.LogStore`` (``ObjectStoreLogStore`` for S3-class stores:
+one conditional PUT per commit, probed under the same concurrency
+suite as the JVM path — tests/test_logstore.py), so the
+offset/partition/Arrow protocol above is storage-agnostic.
 """
 
 from __future__ import annotations
@@ -70,191 +71,19 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from aoseventstreamer_spark.logstore import (
-    LogStore,
-    PythonFSLogStore,
-    _strip_scheme,
-)
+from aoseventstreamer_spark.logstore import PythonFSLogStore, _strip_scheme
 from aoseventstreamer_spark.tablelog import (
     CommitConflict,
+    ManifestLog,
     _stat_encode,
-    build_commit_doc,
-    resolve_state,
     stats_columns_for,
 )
 
 
-class _LocalManifests:
-    """Manifest IO over a pluggable plain-Python LogStore (default:
-    ``PythonFSLogStore``, byte-compatible with the JVM path on a
-    shared local directory; an object-store deployment passes
-    ``ObjectStoreLogStore`` — see logstore module doc)."""
-
-    def __init__(self, table_path: str, log: LogStore | None = None):
-        self.root = _strip_scheme(table_path)
-        self.log = log or PythonFSLogStore(table_path)
-
-    def versions(self) -> list[int]:
-        return self.log.versions()
-
-    def latest(self) -> int:
-        """Head version via the checkpoint pointer (one aux read +
-        O(tail) probes) — the per-microbatch resolution cost at 10^5
-        commits, vs the O(commits) full listing."""
-        vs = self.log.fast_versions()
-        return vs[-1] if vs else 0
-
-    def versions_above(self, floor: int) -> list[int]:
-        """Versions > floor: pointer-seeded when the fast list covers
-        the range (stream tails — floor is recent), full listing for
-        deep catch-up from an old offset."""
-        vs = self.log.fast_versions()
-        if vs and vs[0] > floor + 1:
-            vs = self.log.versions()
-        return [v for v in vs if v > floor]
-
-    def read(self, version: int) -> dict:
-        return self.log.read(version)
-
-    def state(self, version: int | None = None):
-        vs = self.log.fast_versions()
-        v = vs[-1] if version is None and vs else (version or 0)
-        if vs and 0 < v < vs[0]:
-            vs = self.log.versions()  # time travel below the pointer
-        if vs and 0 < v < vs[0]:
-            # below the retained log (expire_manifests): replaying
-            # would silently yield an empty table — fail loudly, the
-            # same contract as TableLog._replay
-            raise ValueError(
-                f"version {v} predates the retained log (oldest "
-                f"manifest is {vs[0]})"
-            )
-        files, schema_doc, _txns, _cons = resolve_state(self.log, v, vs)
-        return files, schema_doc
-
-    def schema(self) -> T.StructType:
-        _, doc = self.state()
-        if doc is None:
-            raise ValueError(
-                f"tablelog table {self.root} has no committed schema"
-            )
-        # column-mapped tables keep their mapping metadata on the
-        # fields; _read_file_batches resolves file columns by the
-        # PHYSICAL name each field's metadata records and emits the
-        # logical name, so mapped tables stream like unmapped ones
-        return T.StructType.fromJson(doc)
-
-    def version_at(self, timestamp_ms: int) -> int:
-        """Newest version committed at or before ``timestamp_ms``
-        (commit timestamps are monotone under the commit CAS). Binary
-        search — O(log N) manifest reads, same as TableLog.version_at."""
-        vs = self.versions()
-        lo, hi, best = 0, len(vs) - 1, 0
-        while lo <= hi:
-            mid = (lo + hi) // 2
-            if self.read(vs[mid]).get("timestamp_ms", 0) <= timestamp_ms:
-                best = vs[mid]
-                lo = mid + 1
-            else:
-                hi = mid - 1
-        return best
-
-    def adds_between(
-        self, start_v: int, end_v: int, ignore_changes: bool = False
-    ) -> list[dict]:
-        """Data-change add ENTRIES (path + optional deletion vector)
-        in (start_v, end_v]. A data-change REMOVE in the range
-        (DELETE/MERGE rewrote consumed files) is refused unless
-        ``ignore_changes`` — the rewritten files would re-deliver
-        surviving rows (Delta's ignoreChanges contract; layout-only
-        OPTIMIZE commits stay invisible)."""
-        out = []
-        for v in self.versions_above(start_v):
-            if v <= end_v:
-                for a in self.read(v)["actions"]:
-                    if a["op"] == "add" and a.get("data_change", True):
-                        out.append(
-                            {
-                                "path": a["path"],
-                                **({"dv": a["dv"]} if a.get("dv") else {}),
-                            }
-                        )
-                    elif (
-                        a["op"] == "remove"
-                        and a.get("data_change", True)
-                        and not ignore_changes
-                    ):
-                        raise ValueError(
-                            f"version {v} contains a data-change remove; "
-                            "set .option('readChangeFeed', 'true') to "
-                            "stream row-level deltas, or "
-                            ".option('ignoreChanges', 'true') to "
-                            "deliver rewritten files whole (surviving "
-                            "rows will re-deliver)"
-                        )
-        return out
-
-
-class _LocalCommitter:
-    """Plain-Python commit path for the NATIVE WRITER over a
-    pluggable LogStore (default ``PythonFSLogStore``, byte-compatible
-    with the JVM path on a shared directory; ``ObjectStoreLogStore``
-    for S3-class stores — one conditional PUT per commit, see the
-    logstore module doc). Shares the manifest-document construction
-    with ``TableLog.commit`` through ``build_commit_doc`` and the
-    replay through ``resolve_state``, so the two write paths cannot
-    drift."""
-
-    def __init__(
-        self,
-        table_path: str,
-        checkpoint_interval: int = 10,
-        log: LogStore | None = None,
-    ):
-        self.man = _LocalManifests(table_path, log=log)
-        self.log = self.man.log
-        self.checkpoint_interval = checkpoint_interval
-
-    def latest(self) -> int:
-        vs = self.log.fast_versions()
-        return vs[-1] if vs else 0
-
-    def replay(self, version: int):
-        return resolve_state(self.log, version)
-
-    def commit(
-        self,
-        added: list[dict],
-        removed: list,
-        schema_json: dict | None,
-        txn: tuple[str, int] | None,
-        operation: str,
-        op_metrics: dict,
-        expected_version: int,
-    ) -> int:
-        version = expected_version + 1
-        on_boundary = version % self.checkpoint_interval == 0
-        doc = build_commit_doc(
-            version,
-            added=added,
-            removed=removed,
-            data_change=True,
-            schema_json=schema_json,
-            txn=txn,
-            operation=operation,
-            op_metrics=op_metrics,
-            constraints=None,
-            checkpoint_state=(
-                self.replay(expected_version) if on_boundary else None
-            ),
-        )
-        self.log.write_atomic(version, doc)
-        if on_boundary:
-            try:
-                self.log.write_pointer(version, {"format": "json"})
-            except Exception:
-                pass  # pointer is advice; the commit stands
-        return version
+def _manifests(path: str) -> ManifestLog:
+    """The manifest core of a ``file:`` table, over the plain-Python
+    log store (no JVM on executors)."""
+    return ManifestLog(PythonFSLogStore(path))
 
 
 class _StatsAgg:
@@ -524,10 +353,10 @@ class TableLogBatchWriter(DataSourceArrowWriter):
         txn: tuple[str, int] | None,
         operation: str,
     ) -> int:
-        committer = _LocalCommitter(self.path)
+        man = _manifests(self.path)
         for _ in range(10):
-            base = committer.latest()
-            live, schema_json, txns, cons = committer.replay(base)
+            base = man.latest()
+            live, schema_json, txns, cons = man.state(base)
             if txn is not None and int(txns.get(txn[0], -1)) >= int(txn[1]):
                 # the stamp landed since our pre-check (a zombie driver
                 # replaying the same batch concurrently: both passed the
@@ -554,7 +383,7 @@ class TableLogBatchWriter(DataSourceArrowWriter):
                 else []
             )
             try:
-                return committer.commit(
+                return man.commit(
                     added=entries,
                     removed=sorted(removed, key=lambda e: e["path"]),
                     schema_json=self._schema_for_commit(schema_json),
@@ -608,8 +437,7 @@ class TableLogStreamWriter(TableLogBatchWriter, DataSourceStreamArrowWriter):
         self.txn_app = txn_app or f"tablelog-native-sink:{self.path}"
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        committer = _LocalCommitter(self.path)
-        _live, _schema, txns, _cons = committer.replay(committer.latest())
+        _live, _schema, txns, _cons = _manifests(self.path).state()
         stored = int(txns.get(self.txn_app, -1))
         if stored == int(batchId):
             # crash-replayed batch: drop the staged duplicates
@@ -911,7 +739,9 @@ class TableLogBatchReader(DataSourceReader):
             _norm_literal,
         )
 
-        files, schema_doc = _LocalManifests(self.path).state(self.version)
+        files, schema_doc, _txns, _cons = _manifests(self.path).state(
+            self.version
+        )
         if self.pushed and files:
             fields = {}
             pm = {}  # logical -> physical (stats are keyed physical)
@@ -980,18 +810,34 @@ class TableLogStreamReader(DataSourceStreamReader):
         self.schema_ = schema
         self.starting = starting
         self.ignore_changes = ignore_changes
+        self.man = _manifests(self.path)
 
     def initialOffset(self) -> dict:
         return {"version": self.starting}
 
     def latestOffset(self) -> dict:
-        v = _LocalManifests(self.path).latest()
+        v = self.man.latest()
         return {"version": v if v else self.starting}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        entries = _LocalManifests(self.path).adds_between(
-            int(start["version"]), int(end["version"]), self.ignore_changes
-        )
+        """The data-change adds in ``(start, end]``. A data-change
+        REMOVE in the range (DELETE/MERGE rewrote consumed files) is
+        refused unless ``ignoreChanges``: the rewritten files would
+        re-deliver surviving rows (Delta's ignoreChanges contract)."""
+        entries = []
+        for v, adds, removes in self.man.changes(
+            int(start["version"]), int(end["version"])
+        ):
+            if removes and not self.ignore_changes:
+                raise ValueError(
+                    f"version {v} contains a data-change remove; "
+                    "set .option('readChangeFeed', 'true') to "
+                    "stream row-level deltas, or "
+                    ".option('ignoreChanges', 'true') to "
+                    "deliver rewritten files whole (surviving "
+                    "rows will re-deliver)"
+                )
+            entries.extend(adds)
         # an optimize-only (or empty) range still needs one partition:
         # Spark plans the batch either way, and an empty sequence is
         # rejected by the runner
@@ -1028,34 +874,25 @@ class TableLogCDFStreamReader(DataSourceStreamReader):
         self.path = _strip_scheme(path)
         self.schema_ = schema  # includes _change_type/_commit_version
         self.starting = starting
+        self.man = _manifests(self.path)
 
     def initialOffset(self) -> dict:
         return {"version": self.starting}
 
     def latestOffset(self) -> dict:
-        v = _LocalManifests(self.path).latest()
+        v = self.man.latest()
         return {"version": v if v else self.starting}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        man = _LocalManifests(self.path)
         out: list[InputPartition] = []
-        for v in man.versions_above(int(start["version"])):
-            if v > int(end["version"]):
-                continue
-            adds, removes = [], []
-            for a in man.read(v)["actions"]:
-                if not a.get("data_change", True):
-                    continue
-                entry = {
-                    "path": a["path"],
-                    **({"dv": a["dv"]} if a.get("dv") else {}),
-                }
-                (adds if a["op"] == "add" else removes).append(entry)
+        for v, adds, removes in self.man.changes(
+            int(start["version"]), int(end["version"])
+        ):
             if adds and removes:
                 out.append(_ChangePartition(v, adds, removes))
             elif adds:
                 out.extend(_ChangePartition(v, [e], []) for e in adds)
-            elif removes:
+            else:
                 out.extend(_ChangePartition(v, [], [e]) for e in removes)
         return out or [_ChangePartition(-1, [], [])]
 
@@ -1094,7 +931,16 @@ class TableLogDataSource(DataSource):
         return path
 
     def schema(self) -> T.StructType:
-        sch = _LocalManifests(self._path()).schema()
+        _, doc, _, _ = _manifests(self._path()).state()
+        if doc is None:
+            raise ValueError(
+                f"tablelog table {self._path()} has no committed schema"
+            )
+        # column-mapped tables keep their mapping metadata on the
+        # fields; _read_file_batches resolves file columns by the
+        # PHYSICAL name each field's metadata records and emits the
+        # logical name, so mapped tables stream like unmapped ones
+        sch = T.StructType.fromJson(doc)
         return _cdf_schema(sch) if self._cdf() else sch
 
     def reader(self, schema: T.StructType) -> TableLogBatchReader:
@@ -1119,7 +965,7 @@ class TableLogDataSource(DataSource):
                 ts_ms = int(
                     datetime.datetime.strptime(s, fmt).timestamp() * 1000
                 )
-            v = _LocalManifests(self._path()).version_at(ts_ms)
+            v = _manifests(self._path()).version_at(ts_ms)
         return TableLogBatchReader(
             self._path(), schema, int(v) if v is not None else None
         )

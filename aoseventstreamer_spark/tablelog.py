@@ -37,13 +37,18 @@ of that idea:
   deleted by commits, so a reader pinned to version N is isolated from
   concurrent appends AND from OPTIMIZE — no reader-visible swap window
   (the documented gap in operators/compaction.py's rename protocol).
-- STREAM = ``TableLogStream`` checkpoints a SNAPSHOT VERSION (not file
-  paths) and delivers only ``add`` actions with ``data_change=True``
-  from versions it has not processed. Compaction commits its rewrite
-  as ``remove(old)+add(new)`` with ``data_change=False``, so a live
-  tail skips it entirely — the exactly-once inversion of the round-7
-  hazard (tests/test_tablelog.py asserts zero re-delivery across a
-  kill → optimize → restart).
+- STREAM = ``spark.readStream.format("tablelog")``
+  (sources/tablelog_source.py) keeps a SNAPSHOT VERSION (not file
+  paths) as its offset in Spark's own checkpoint and delivers only
+  ``add`` actions with ``data_change=True`` from versions it has not
+  processed. Compaction commits its rewrite as ``remove(old)+add(new)``
+  with ``data_change=False``, so a live tail skips it entirely — the
+  exactly-once inversion of the round-7 hazard (tests assert zero
+  re-delivery across a kill → optimize → restart).
+- MANIFEST CORE = ``ManifestLog``, JVM-free over a ``LogStore``: head
+  resolution, state at a version, ``version_at``, the data-change
+  walk over a version range, and the commit. ``TableLog`` and the
+  native source both run on it.
 - OPTIMIZE = the small-file rewrite as ONE atomic commit; VACUUM
   deletes data files no retained snapshot references (age-guarded).
 - DML = DELETE / UPDATE / MERGE / replaceWhere as copy-on-write
@@ -54,12 +59,12 @@ of that idea:
   rows in per-file position sidecars (``_dv/<commit>/__f=<key>/``)
   instead of rewriting — write cost ∝ deleted rows, measured 1411×
   less bytes written than copy-on-write for a 1%-spread delete
-  (tools/tablelog_dv_probe.py). Every read path applies dvs through
-  ``_scan_entries`` (position anti-join on the scan's ``_metadata``
-  row index), OPTIMIZE physically purges them, VACUUM sweeps
-  unreferenced generations, ``metadata_count`` subtracts
-  cardinalities, and CDF diffs LOGICAL rows so a dv commit nets
-  exactly the newly-marked deletes.
+  (tools/tablelog_dv_probe.py, removed; last held by commit 0c581d3).
+  Every read path applies dvs through ``_scan_entries`` (position
+  anti-join on the scan's ``_metadata`` row index), OPTIMIZE
+  physically purges them, VACUUM sweeps unreferenced generations,
+  ``metadata_count`` subtracts cardinalities, and CDF diffs LOGICAL
+  rows so a dv commit nets exactly the newly-marked deletes.
 - METADATA-ONLY AGGREGATES = ``metadata_count`` / ``metadata_min_max``
   answer COUNT(*)/MIN/MAX from manifest stats alone when provable
   (file-level all/none/unknown classification; None = fall back to a
@@ -114,7 +119,6 @@ from pyspark.sql import types as T
 
 from aoseventstreamer_spark.logstore import (
     _LOCK_STALE_SECONDS,
-    _MANIFEST_DIGITS,
     LOG_DIR,
     CommitConflict,
     HadoopLogStore,
@@ -216,9 +220,10 @@ class ConstraintViolation(Exception):
 # stats prove no row can match a conjunctive predicate — BEFORE any
 # executor touches them. At 100 TB the manifest is KBs per commit and
 # the pruning is a driver-side loop over metadata; the scan itself
-# shrinks by the selectivity of the leading columns (measured in
-# tools/tablelog_skipping_probe.py). Stats here are EXACT (computed by
-# a distributed agg over the just-written files, one job per commit),
+# shrinks by the selectivity of the leading columns (measured by
+# tools/tablelog_skipping_probe.py, removed; last held by commit
+# 0c581d3). Stats here are EXACT (computed by a distributed agg over
+# the just-written files, one job per commit),
 # so unlike parquet footer stats there is no truncation caveat.
 
 _STATS_ATOMIC = (
@@ -551,8 +556,8 @@ def _where_to_column(schema: T.StructType, where: list) -> "F.Column":
 def replay_from(
     versions: list[int], read_manifest, version: int
 ) -> tuple[dict[str, dict], dict | None, dict[str, int], dict[str, str]]:
-    """Pure replay shared by the JVM-FS TableLog and the Python
-    datasource reader (sources/tablelog_source.py): walk BACKWARD only
+    """Pure replay (``resolve_state``'s path on JSON-checkpoint
+    tables, and its fallback): walk BACKWARD only
     until a checkpoint manifest (one carrying ``full``), then fold the
     bounded suffix forward. Returns ({rel_path -> entry}, schema doc,
     {txn app_id -> last committed txn version},
@@ -654,8 +659,8 @@ def resolve_state(
     (pointer first — one aux read; the sidecar listing only as a
     fallback for time travel below the pointer), then fold the JSON
     tail. Tables with only JSON ``full`` checkpoints take the
-    classic backward walk. JVM-free; shared by TableLog._replay and
-    the native data source's _LocalManifests."""
+    classic backward walk. JVM-free; ``ManifestLog.state`` calls it
+    for ``TableLog`` and the native data source alike."""
     vs = versions if versions is not None else log.fast_versions()
     ptr = log.read_pointer()
     if ptr is None or ptr.get("format") != "parquet":
@@ -723,9 +728,9 @@ def build_commit_doc(
     constraints: dict[str, str] | None,
     checkpoint_state: tuple | None,
 ) -> dict:
-    """Pure manifest-document builder shared by ``TableLog.commit``
-    (JVM-FS path) and the native data source's plain-Python committer
-    (sources/tablelog_source.py) — ONE place defines the action
+    """Pure manifest-document builder of ``ManifestLog.commit`` (the
+    one commit path of ``TableLog`` and the native writer) — ONE
+    place defines the action
     ordering (removes before adds: a deletion-vector commit re-adds
     the same path), the checkpoint embedding (full live set + schema +
     txns + constraints so backward replay stops there), and the field
@@ -808,6 +813,183 @@ def build_commit_doc(
     return doc
 
 
+class ManifestLog:
+    """The manifest log of one table over a ``LogStore``, with no JVM:
+    head resolution, the state at a version, timestamp search, the
+    data-change walk over a version range, and the commit. ``TableLog``
+    and the native ``format("tablelog")`` source
+    (sources/tablelog_source.py) both run on it, so the two paths share
+    one implementation of each."""
+
+    def __init__(
+        self,
+        log: LogStore,
+        checkpoint_interval: int = 10,
+        checkpoint_format: str = "json",
+    ):
+        if checkpoint_format not in ("json", "parquet"):
+            raise ValueError(
+                f"checkpoint_format must be 'json' or 'parquet', got "
+                f"{checkpoint_format!r}"
+            )
+        self.log = log
+        self.checkpoint_interval = checkpoint_interval
+        # 'json' embeds the full live set in every Nth manifest (the
+        # original format — fine to ~10^4 commits / 10^4 files);
+        # 'parquet' writes Delta-style sidecar checkpoints + the
+        # _last_checkpoint pointer instead, keeping manifests O(delta)
+        # and version resolution O(tail) at 10^5-10^6 commits
+        # (measured: tools/tablelog_logscale_probe.py)
+        self.checkpoint_format = checkpoint_format
+
+    def latest(self) -> int:
+        """Head version, 0 = empty table. One pointer read + O(tail)
+        existence probes once a checkpoint pointer exists; a full
+        listing before that."""
+        vs = self.log.fast_versions()
+        return vs[-1] if vs else 0
+
+    def _versions(self, lo: int | None, hi: int | None) -> list[int]:
+        """Version list for a read of ``lo..hi``: the pointer-seeded
+        list, re-listed in full only when ``lo`` lies below it (time
+        travel). ``hi`` past the head and ``lo`` below the retained log
+        (expire_manifests gave up that history) are refused, naming the
+        bound: a past-head read would silently return the head, an
+        expired one an empty or partial table."""
+        vs = self.log.fast_versions()
+        head = vs[-1] if vs else 0
+        if hi is not None and hi > head:
+            raise ValueError(
+                f"version {hi} is past the head of the log (latest "
+                f"version is {head})"
+            )
+        if lo is not None and vs and 0 < lo < vs[0]:
+            vs = self.log.versions()
+            if vs and 0 < lo < vs[0]:
+                raise ValueError(
+                    f"version {lo} predates the retained log (oldest "
+                    f"manifest is {vs[0]}; expire_manifests removed "
+                    "older history)"
+                )
+        return vs
+
+    def state(
+        self, version: int | None = None
+    ) -> tuple[dict[str, dict], dict | None, dict[str, int], dict[str, str]]:
+        """Live file set {rel_path -> entry} at ``version`` (None = the
+        head) plus the stored schema doc, the idempotent-writer txn map
+        and the constraint map, via ``resolve_state``."""
+        vs = self._versions(version, version)
+        if version is None:
+            version = vs[-1] if vs else 0
+        return resolve_state(self.log, version, vs)
+
+    def version_at(self, timestamp_ms: int) -> int:
+        """Newest version committed at or before ``timestamp_ms``, 0 if
+        none (commit timestamps are monotone under the commit CAS).
+        Binary search over the version list: O(log N) manifest reads."""
+        vs = self.log.versions()
+        lo, hi, best = 0, len(vs) - 1, 0
+        while lo <= hi:
+            mid = (lo + hi) // 2
+            if self.log.read(vs[mid]).get("timestamp_ms", 0) <= timestamp_ms:
+                best = vs[mid]
+                lo = mid + 1
+            else:
+                hi = mid - 1
+        return best
+
+    def changes(
+        self, start: int, end: int
+    ) -> list[tuple[int, list[dict], list[dict]]]:
+        """``(version, adds, removes)`` of every commit in ``(start,
+        end]`` with data-change actions; entries are the path plus the
+        deletion vector, if any. Reads only the manifests in the range;
+        layout-only commits (OPTIMIZE, ``data_change=False``) are
+        skipped."""
+        out = []
+        for v in self._versions(start + 1, end):
+            if not start < v <= end:
+                continue
+            adds: list[dict] = []
+            removes: list[dict] = []
+            for a in self.log.read(v)["actions"]:
+                if a.get("data_change", True):
+                    (adds if a["op"] == "add" else removes).append(
+                        {"path": a["path"], **({"dv": a["dv"]} if a.get("dv") else {})}
+                    )
+            if adds or removes:
+                out.append((v, adds, removes))
+        return out
+
+    def commit(
+        self,
+        *,
+        expected_version: int,
+        added: list[dict] | None = None,
+        removed: list | None = None,
+        data_change: bool = True,
+        schema_json: dict | None = None,
+        txn: tuple[str, int] | None = None,
+        operation: str | None = None,
+        op_metrics: dict | None = None,
+        constraints: dict[str, str] | None = None,
+        base_state: tuple | None = None,
+    ) -> int:
+        """Publish manifest ``expected_version + 1`` through the store's
+        CAS (a lost race raises CommitConflict) and return it. On a
+        checkpoint boundary, JSON mode embeds the full state in the
+        manifest and advances the pointer; parquet mode writes the
+        sidecar. ``base_state`` is the state at ``expected_version``
+        when the caller already holds it (no replay then).
+
+        Checkpoint bookkeeping is POST-commit and best-effort: a crash
+        there only means replay walks to the previous checkpoint. Old
+        sidecars are retired by expire_manifests together with the
+        manifests they anchor (retiring them here would starve expire
+        of an anchor at its cutoff)."""
+        version = expected_version + 1
+        on_boundary = version % self.checkpoint_interval == 0
+        json_mode = self.checkpoint_format == "json"
+        doc = build_commit_doc(
+            version,
+            added=added,
+            removed=removed,
+            data_change=data_change,
+            schema_json=schema_json,
+            txn=txn,
+            operation=operation,
+            op_metrics=op_metrics,
+            constraints=constraints,
+            checkpoint_state=(
+                (base_state or self.state(expected_version))
+                if on_boundary and json_mode
+                else None
+            ),
+        )
+        self.log.write_atomic(version, doc)
+        if on_boundary:
+            try:
+                if json_mode:
+                    self.log.write_pointer(version, {"format": "json"})
+                else:
+                    write_checkpoint(
+                        self.log,
+                        version,
+                        *(
+                            replay_seeded(
+                                [version], lambda _v: doc, version,
+                                expected_version, base_state,
+                            )
+                            if base_state is not None
+                            else self.state(version)
+                        ),
+                    )
+            except Exception:
+                pass  # derived state; the committed manifest stands
+        return version
+
+
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -830,7 +1012,6 @@ class TableLog:
     ):
         self.spark = spark
         self.path = path.rstrip("/")
-        self.checkpoint_interval = checkpoint_interval
         # data-skipping stats: explicit column list, or (default) the
         # first `max_stats_columns` atomic columns of the written frame
         # — Delta's "first 32" convention, tightened because stats are
@@ -861,18 +1042,7 @@ class TableLog:
             else:
                 log_store = HadoopLogStore(spark, self.path)
         self._log: LogStore = log_store
-        if checkpoint_format not in ("json", "parquet"):
-            raise ValueError(
-                f"checkpoint_format must be 'json' or 'parquet', got "
-                f"{checkpoint_format!r}"
-            )
-        # 'json' embeds the full live set in every Nth manifest (the
-        # original format — fine to ~10^4 commits / 10^4 files);
-        # 'parquet' writes Delta-style sidecar checkpoints + the
-        # _last_checkpoint pointer instead, keeping manifests O(delta)
-        # and version resolution O(tail) at 10^5-10^6 commits
-        # (measured: tools/tablelog_logscale_probe.py)
-        self.checkpoint_format = checkpoint_format
+        self._core = ManifestLog(log_store, checkpoint_interval, checkpoint_format)
         # version THIS instance committed last: an optimistic CAS base
         # for the next bare commit (None = resolve from the log). A
         # stale value only costs one CommitConflict + re-resolve; it
@@ -883,62 +1053,35 @@ class TableLog:
 
     def _list_versions(self) -> list[int]:
         """FULL manifest listing — maintenance paths only (history,
-        expire, vacuum, version_at). Hot paths use the pointer-seeded
+        expire, vacuum). Hot paths use the pointer-seeded
         ``fast_versions`` via latest_version/_replay."""
         return self._log.versions()
 
     def latest_version(self) -> int:
-        """0 = empty table (no commits). One pointer read + O(tail)
-        existence probes once a checkpoint pointer exists; a full
-        listing before that."""
-        vs = self._log.fast_versions()
-        return vs[-1] if vs else 0
+        """0 = empty table (no commits); see ``ManifestLog.latest``."""
+        return self._core.latest()
 
     def _read_manifest(self, version: int) -> dict:
         return self._log.read(version)
 
-    def _write_manifest(self, version: int, doc: dict) -> None:
-        """Publish manifest ``version`` exactly once (the commit
-        point); losing the race raises CommitConflict. The atomic
-        primitive is the LogStore's: tmp-write + rename under an
-        exclusive-create lock on HDFS/local, ONE conditional PUT on
-        S3-class object stores."""
-        self._log.write_atomic(version, doc)
-
     # ---------- state reconstruction ----------
 
     def _replay(
-        self, version: int
+        self, version: int | None
     ) -> tuple[dict[str, dict], dict | None, dict[str, int], dict[str, str]]:
-        """Live file set {rel_path -> entry} at ``version`` plus the
-        stored schema doc, the idempotent-writer txn map, and the
-        constraint map. Bounded backward walk via ``replay_from``
-        (checkpoint manifests re-embed schema, txns AND constraints,
-        so the walk is bounded for all four). A version BELOW the
-        retained log (expire_manifests gave up that history) is
-        refused loudly — replaying it would silently yield an empty
-        table."""
-        vs = self._log.fast_versions()
-        if vs and 0 < version < vs[0]:
-            # below the pointer: re-list in full (time travel), and
-            # only refuse if the manifest truly expired
-            vs = self._log.versions()
-            if vs and 0 < version < vs[0]:
-                raise ValueError(
-                    f"version {version} predates the retained log "
-                    f"(oldest manifest is {vs[0]}; expire_manifests "
-                    "removed older history)"
-                )
-        return resolve_state(self._log, version, vs)
+        """Live file set {rel_path -> entry} at ``version`` (None = the
+        head) plus the stored schema doc, the idempotent-writer txn
+        map, and the constraint map (``ManifestLog.state``: bounded
+        replay from the newest checkpoint; a version past the head or
+        below the retained log is refused)."""
+        return self._core.state(version)
 
     def snapshot_files(self, version: int | None = None) -> list[dict]:
-        v = self.latest_version() if version is None else version
-        files, _, _, _ = self._replay(v)
+        files, _, _, _ = self._replay(version)
         return sorted(files.values(), key=lambda e: e["path"])
 
     def schema(self, version: int | None = None) -> T.StructType | None:
-        v = self.latest_version() if version is None else version
-        _, doc, _, _ = self._replay(v)
+        _, doc, _, _ = self._replay(version)
         return T.StructType.fromJson(doc) if doc else None
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
@@ -948,8 +1091,7 @@ class TableLog:
         with standard SQL CHECK semantics: a row fails only when the
         expression is FALSE — NULL (unknown) passes. NOT NULL is the
         special case ``col IS NOT NULL``."""
-        v = self.latest_version() if version is None else version
-        _, _, _, cons = self._replay(v)
+        _, _, _, cons = self._replay(version)
         return cons
 
     # ---------- column mapping ----------
@@ -1049,8 +1191,7 @@ class TableLog:
         contract: a writer that stamps monotone versions can replay a
         batch safely because the already-committed stamp makes the
         retry a no-op (see ``append(txn_app=...)``)."""
-        v = self.latest_version() if version is None else version
-        _, _, txns, _ = self._replay(v)
+        _, _, txns, _ = self._replay(version)
         return int(txns.get(app_id, -1))
 
     # ---------- commit ----------
@@ -1104,26 +1245,19 @@ class TableLog:
                     else self.latest_version()
                 )
             )
-            version = base + 1
-            on_boundary = version % self.checkpoint_interval == 0
-            doc = build_commit_doc(
-                version,
-                added=added,
-                removed=removed,
-                data_change=data_change,
-                schema_json=schema.jsonValue() if schema is not None else None,
-                txn=txn,
-                operation=operation,
-                op_metrics=op_metrics,
-                constraints=constraints,
-                checkpoint_state=(
-                    (_base_state or self._replay(base))
-                    if on_boundary and self.checkpoint_format == "json"
-                    else None
-                ),
-            )
             try:
-                self._write_manifest(version, doc)
+                version = self._core.commit(
+                    expected_version=base,
+                    added=added,
+                    removed=removed,
+                    data_change=data_change,
+                    schema_json=schema.jsonValue() if schema is not None else None,
+                    txn=txn,
+                    operation=operation,
+                    op_metrics=op_metrics,
+                    constraints=constraints,
+                    base_state=_base_state,
+                )
                 break
             except CommitConflict:
                 # a stale optimistic base is OUR bookkeeping, not a
@@ -1135,34 +1269,6 @@ class TableLog:
                 if expected_version is not None or attempts > 20:
                     raise
         self._head_cache = version
-        if on_boundary:
-            # checkpoint bookkeeping is POST-commit and best-effort:
-            # a crash here only means replay walks to the previous
-            # checkpoint. JSON mode embedded the state in the manifest
-            # itself and just advances the pointer; parquet mode
-            # writes the sidecar (bounded re-read: <=interval JSON
-            # manifests above the previous checkpoint). Old sidecars
-            # are retired by expire_manifests together with the
-            # manifests they anchor (retiring them here would starve
-            # expire of an anchor at its cutoff).
-            try:
-                if self.checkpoint_format == "json":
-                    self._log.write_pointer(version, {"format": "json"})
-                else:
-                    write_checkpoint(
-                        self._log,
-                        version,
-                        *(
-                            replay_seeded(
-                                [version], lambda _v: doc, version, base,
-                                _base_state,
-                            )
-                            if _base_state is not None
-                            else self._replay(version)
-                        ),
-                    )
-            except Exception:
-                pass  # derived state; the committed manifest stands
         return version
 
     def _commit_or_rebase(
@@ -1831,24 +1937,9 @@ class TableLog:
 
     def version_at(self, timestamp_ms: int) -> int:
         """Time travel: the newest version committed at or before
-        ``timestamp_ms`` (manifest commit timestamps are monotone
-        under the commit CAS). 0 if none. Binary search over the
-        version list — O(log N) manifest READS at N commits (the
-        linear walk read every manifest up to the answer; at 10^5
-        commits that was the dominant timestamp-travel cost)."""
-        vs = self._list_versions()
-        lo, hi, best = 0, len(vs) - 1, 0
-        while lo <= hi:
-            mid = (lo + hi) // 2
-            if (
-                self._read_manifest(vs[mid]).get("timestamp_ms", 0)
-                <= timestamp_ms
-            ):
-                best = vs[mid]
-                lo = mid + 1
-            else:
-                hi = mid - 1
-        return best
+        ``timestamp_ms``, 0 if none (``ManifestLog.version_at``:
+        O(log N) manifest reads at N commits)."""
+        return self._core.version_at(timestamp_ms)
 
     @staticmethod
     def _norm_branch(fields: dict, clause) -> tuple:
@@ -2141,16 +2232,12 @@ class TableLog:
 
         Requires the removed files in the range to still exist —
         i.e. VACUUM has not swept past ``from_version`` (same
-        retention contract as Delta CDF)."""
+        retention contract as Delta CDF). A range that starts below the
+        retained log or ends past the head is refused."""
         from pyspark.sql import functions as F
 
         to = self.latest_version() if to_version is None else to_version
-        vs = self._list_versions()
-        if vs and from_version + 1 < vs[0]:
-            raise ValueError(
-                f"change feed from version {from_version} predates the "
-                f"retained log (oldest manifest is {vs[0]})"
-            )
+        commits = self._core.changes(from_version, to)
         sch = self.schema(to)
         if sch is None:
             raise ValueError(f"table {self.path} has no commits")
@@ -2168,33 +2255,14 @@ class TableLog:
             # dv)) nets exactly the newly-marked rows as deletes
             return self._scan_entries(entries, sch).select(*cols)
 
-        def action_entry(a: dict) -> dict:
-            return {
-                "path": a["path"],
-                **({"dv": a["dv"]} if a.get("dv") else {}),
-            }
-
         pieces: list[DataFrame] = []
-        for v in range(from_version + 1, to + 1):
-            m = self._read_manifest(v)
-            adds = [
-                action_entry(a)
-                for a in m["actions"]
-                if a["op"] == "add" and a.get("data_change", True)
-            ]
-            removes = [
-                action_entry(a)
-                for a in m["actions"]
-                if a["op"] == "remove" and a.get("data_change", True)
-            ]
-            if not adds and not removes:
-                continue
+        for v, adds, removes in commits:
             # one-sided commits skip exceptAll entirely: a pure append
             # is all-inserts and a pure retention delete all-deletes —
             # this keeps the dominant append history linear-scan cheap
-            # (measured 11.4 s → sub-second on a 16-append history,
-            # tools/tablelog_dml_probe.py) instead of paying a
-            # two-sided anti-join per commit
+            # (measured 11.4 s → sub-second on a 16-append history by
+            # tools/tablelog_dml_probe.py, removed; last held by commit
+            # 0c581d3) instead of paying a two-sided anti-join per commit
             dv_delta = self._dv_only_delta(adds, removes, sch, cols)
             if dv_delta is not None:
                 deltas = dv_delta
@@ -3733,172 +3801,6 @@ class TableLog:
                 self._fs.delete(st.getPath(), True)
                 deleted.append(n)
         return deleted
-
-
-class TableLogStream:
-    """Snapshot-diff streaming source: checkpoints a VERSION, delivers
-    only ``data_change`` adds. This is what makes compaction invisible
-    to a live tail — the exactly-once inversion of the file-source
-    path-checkpoint hazard (operators/compaction.py docstring).
-
-    Delivery contract: ``deliver(version_from, version_to, df)`` is
-    called once per non-empty batch; the position commits AFTER it
-    returns, so a crash inside ``deliver`` replays that batch
-    (at-least-once across a mid-batch crash, exactly-once across
-    graceful restarts AND across any amount of compaction)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table_path: str,
-        checkpoint: str,
-        ignore_changes: bool = False,
-    ):
-        self.spark = spark
-        self.log = TableLog(spark, table_path)
-        self.checkpoint = checkpoint.rstrip("/")
-        self.ignore_changes = ignore_changes
-        self._fs, self._ck_root, self._jvm = _fs(spark, self.checkpoint)
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
-
-    def _position(self) -> int:
-        """Committed position = the MAX over numbered position files
-        (plus the legacy single ``position.json`` if one exists from an
-        older checkpoint). Numbered files are each committed by a
-        tmp-write + rename to a FRESH name, so no step ever deletes the
-        previous position before the new one is durable — the old
-        delete-then-rename protocol lost the position entirely if the
-        process died between the two calls, and ``_position()``'s
-        0-fallback then re-delivered the whole table (round-8
-        self-review finding; crash-window test in
-        tests/test_advice_r8b.py)."""
-        best = 0
-        if self._fs.exists(self._ck_root):
-            for st in self._fs.listStatus(self._ck_root):
-                name = st.getPath().getName()
-                if name.startswith("position-") and name.endswith(".json"):
-                    stem = name[len("position-"):-len(".json")]
-                    if stem.isdigit():
-                        best = max(best, int(stem))
-        legacy = self._Path(f"{self.checkpoint}/position.json")
-        if self._fs.exists(legacy):
-            stream = self._fs.open(legacy)
-            try:
-                ioutils = self._jvm.org.apache.commons.io.IOUtils
-                data = bytes(ioutils.toByteArray(stream))
-            finally:
-                stream.close()
-            best = max(best, int(json.loads(data.decode("utf-8"))["last_version"]))
-        return best
-
-    def _commit_position(self, version: int) -> None:
-        """Commit = rename a tmp file to ``position-<version>.json``
-        (a name that never pre-exists, so the rename is atomic and
-        needs no prior delete on any FS). Older position files are
-        pruned only AFTER the new one is durable; a crash at any point
-        leaves at least one committed position on disk."""
-        tmp = self._Path(f"{self.checkpoint}/.position-{uuid.uuid4().hex}.json")
-        self._fs.mkdirs(self._ck_root)
-        out = self._fs.create(tmp, True)
-        try:
-            out.write(
-                bytearray(
-                    json.dumps({"last_version": version}).encode("utf-8")
-                )
-            )
-        finally:
-            out.close()
-        dst = self._Path(
-            f"{self.checkpoint}/position-{version:0{_MANIFEST_DIGITS}d}.json"
-        )
-        if not self._fs.rename(tmp, dst) and not self._fs.exists(dst):
-            raise IOError("failed to commit stream position")
-        # prune superseded positions + legacy file (best-effort tidy)
-        for st in self._fs.listStatus(self._ck_root):
-            name = st.getPath().getName()
-            if name == "position.json":
-                self._fs.delete(st.getPath(), False)
-            elif name.startswith("position-") and name.endswith(".json"):
-                stem = name[len("position-"):-len(".json")]
-                if stem.isdigit() and int(stem) < version:
-                    self._fs.delete(st.getPath(), False)
-
-    def pending_files(self) -> tuple[int, int, list[dict]]:
-        """(from_version, to_version, add ENTRIES (path + optional
-        deletion vector) of data-change adds in (from, to])."""
-        frm = self._position()
-        to = self.log.latest_version()
-        entries: list[dict] = []
-        for v in range(frm + 1, to + 1):
-            m = self.log._read_manifest(v)
-            for a in m["actions"]:
-                if a["op"] == "add" and a.get("data_change", True):
-                    entries.append(
-                        {
-                            "path": a["path"],
-                            **({"dv": a["dv"]} if a.get("dv") else {}),
-                        }
-                    )
-                elif (
-                    a["op"] == "remove"
-                    and a.get("data_change", True)
-                    and not self.ignore_changes
-                ):
-                    raise ValueError(
-                        f"version {v} contains a data-change remove "
-                        "(DELETE/MERGE rewrote consumed files); this "
-                        "append-only tail cannot stay exactly-once — "
-                        "pass ignore_changes=True to deliver the "
-                        "rewritten files anyway (surviving rows will "
-                        "re-deliver, Delta's ignoreChanges contract)"
-                    )
-        return frm, to, entries
-
-    def run_once(self, deliver) -> bool:
-        """Process all pending snapshots as one micro-batch. Returns
-        True if anything was delivered (or the position advanced)."""
-        frm, to, entries = self.pending_files()
-        if to <= frm:
-            return False
-        if entries:
-            df = self.log._scan_entries(entries, self.log.schema(to))
-            deliver(frm, to, df)
-        self._commit_position(to)
-        return True
-
-
-class TableLogChangeStream(TableLogStream):
-    """Change-data-feed tail (Delta's streaming ``readChangeFeed``):
-    where the append-only ``TableLogStream`` REFUSES data-change
-    removes, this source CONSUMES them — each micro-batch is
-    ``read_changes(position, latest)``, i.e. row-level inserts and
-    deletes with commit stamps, so a downstream consumer can maintain
-    state through DELETE/UPDATE/MERGE instead of going blind the first
-    time DML touches a consumed region. Layout-only commits still
-    deliver nothing. Same position/checkpoint machinery and the same
-    delivery contract as the parent (position commits AFTER deliver
-    returns).
-
-    The canonical consumer is incremental view maintenance:
-    ``apply_count_delta`` folds a batch of changes into a keyed
-    count/sum state frame — the streaming-materialized-view shape that
-    makes CDF worth storing at all."""
-
-    def run_once(self, deliver) -> bool:
-        frm = self._position()
-        to = self.log.latest_version()
-        if to <= frm:
-            return False
-        any_change = False
-        for v in range(frm + 1, to + 1):
-            m = self.log._read_manifest(v)
-            if any(a.get("data_change", True) for a in m["actions"]):
-                any_change = True
-                break
-        if any_change:
-            deliver(frm, to, self.log.read_changes(frm, to))
-        self._commit_position(to)
-        return True
 
 
 def apply_count_delta(

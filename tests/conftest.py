@@ -53,3 +53,32 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def oracle_sf_dir():
     return SF_DIR_ORACLE
+
+
+@pytest.fixture()
+def tablelog_tail():
+    """One micro-batch of the native ``format("tablelog")`` stream,
+    driven the way Spark's micro-batch engine drives the reader, with
+    no streaming query: from the committed ``offset`` (None = the
+    reader's initial offset) take ``latestOffset``, plan ``partitions``
+    and ``read`` each. ``options`` are the format's options.
+    Returns ``(end offset, rows as dicts)``; the end offset is the
+    next call's ``offset``, as Spark's checkpoint would hold it."""
+    from aoseventstreamer_spark.sources.tablelog_source import TableLogDataSource
+
+    def tail(path, offset=None, **options):
+        src = TableLogDataSource(
+            {"path": path, **{k.lower(): str(v) for k, v in options.items()}}
+        )
+        reader = src.streamReader(src.schema())
+        start = reader.initialOffset() if offset is None else offset
+        end = reader.latestOffset()
+        rows = []
+        if end != start:
+            for part in reader.partitions(start, end):
+                for batch in reader.read(part):
+                    rows.extend(batch.to_pylist())
+            reader.commit(end)
+        return end, rows
+
+    return tail

@@ -1,12 +1,9 @@
 """Round-8 second self-review tranche over the tablelog layer: the
-three findings fixed in tablelog.py's stream-position commit, vacuum
-no-commit guard, and append schema re-merge.
+vacuum no-commit guard and the append schema re-merge. (The tranche's
+third finding, the driver-loop stream's position-file commit, went
+with that stream: the native ``format("tablelog")`` stream keeps its
+offset in Spark's own checkpoint.)
 
-1. TableLogStream position commit used delete-then-rename: a process
-   death between the two left NO position file, and _position()'s
-   0-fallback re-delivered the entire table on restart. Now positions
-   are numbered files committed by rename-to-fresh-name (never a
-   delete before the new position is durable), read as max().
 2. vacuum() on a table with zero commits computed an EMPTY keep set,
    so every data file under the root was "unreferenced" and eligible
    for deletion — catastrophic when pointed at a plain parquet dir or
@@ -18,81 +15,17 @@ no-commit guard, and append schema re-merge.
    stored schema. Now the merge re-derives against the head on every
    attempt.
 """
-
 from __future__ import annotations
-
-import json
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aoseventstreamer_spark.tablelog import TableLog, TableLogStream
+from aoseventstreamer_spark.tablelog import TableLog
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-# ---------- 1. crash-safe stream position ----------
-
-
-def test_stream_position_survives_crash_window(spark, tmp_path):
-    """Simulate the old hazard: kill the committer at the exact point
-    the old protocol had deleted position.json but not yet renamed the
-    tmp — with numbered positions the last committed file is still
-    there and the stream resumes from it, not from 0."""
-    tbl, ck = str(tmp_path / "t"), str(tmp_path / "ck")
-    log = TableLog(spark, tbl)
-    log.append(spark.range(0, 10).coalesce(1))
-    stream = TableLogStream(spark, tbl, ck)
-    seen = []
-    stream.run_once(lambda f, t, df: seen.append(df.count()))
-    assert seen == [10]
-    pos_committed = stream._position()
-    assert pos_committed == log.latest_version()
-
-    # second batch: deliver succeeds, then the position commit "crashes"
-    log.append(spark.range(10, 15).coalesce(1))
-
-    class Die(RuntimeError):
-        pass
-
-    crashing = TableLogStream(spark, tbl, ck)
-    orig = crashing._commit_position
-    crashing._commit_position = lambda v: (_ for _ in ()).throw(Die())
-    with pytest.raises(Die):
-        crashing.run_once(lambda f, t, df: seen.append(df.count()))
-    # the PREVIOUS position is still durable — restart replays only the
-    # undelivered batch (at-least-once), never the whole table
-    resumed = TableLogStream(spark, tbl, ck)
-    assert resumed._position() == pos_committed
-    resumed.run_once(lambda f, t, df: seen.append(df.count()))
-    assert seen == [10, 5, 5]  # batch 2 delivered twice, batch 1 once
-    resumed.run_once(lambda f, t, df: seen.append(df.count()))
-    assert seen == [10, 5, 5]  # and nothing re-delivers after that
-
-
-def test_stream_position_reads_legacy_single_file(spark, tmp_path):
-    """A checkpoint written by the old protocol (one position.json)
-    still resumes correctly, and the next commit migrates it to the
-    numbered form."""
-    tbl, ck = str(tmp_path / "t"), str(tmp_path / "ck")
-    log = TableLog(spark, tbl)
-    log.append(spark.range(0, 10).coalesce(1))
-    v1 = log.latest_version()
-    ckdir = tmp_path / "ck"
-    ckdir.mkdir()
-    (ckdir / "position.json").write_text(json.dumps({"last_version": v1}))
-    stream = TableLogStream(spark, tbl, ck)
-    assert stream._position() == v1
-    log.append(spark.range(10, 13).coalesce(1))
-    seen = []
-    stream.run_once(lambda f, t, df: seen.append(df.count()))
-    assert seen == [3]
-    # migrated: legacy file gone, numbered position present
-    assert not (ckdir / "position.json").exists()
-    assert stream._position() == log.latest_version()
 
 
 # ---------- 2. vacuum refuses a commit-less table ----------

@@ -35,13 +35,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aoseventstreamer_spark.logstore import PythonFSLogStore
+from aoseventstreamer_spark.sources.tablelog_source import TableLogStreamWriter
 from aoseventstreamer_spark.tablelog import (
     ConcurrentModification,
+    ManifestLog,
     TableLog,
-)
-from aoseventstreamer_spark.sources.tablelog_source import (
-    TableLogStreamWriter,
-    _LocalCommitter,
 )
 
 SCHEMA = T.StructType(
@@ -74,7 +73,7 @@ def test_stream_writer_zombie_replay_no_duplicate(spark, tmp_path):
     w = TableLogStreamWriter(path, SCHEMA, "app-z")
     # the "other" zombie wins: stamp (app-z, 7) is already committed
     w._commit_entries([], ("app-z", 7), "STREAMING UPDATE")
-    committer = _LocalCommitter(path)
+    committer = ManifestLog(PythonFSLogStore(path))
     v_before = committer.latest()
     rows_before = TableLog(spark, path).read().count()
     # our side already PROMOTED its files (past the pre-check) and now
@@ -184,7 +183,7 @@ def test_stream_sink_batchid_behind_stamp_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="behind the stored txn stamp"):
         w2.commit([], 0)
     # exact replay of the stamped batch is still a silent no-op
-    committer = _LocalCommitter(path)
+    committer = ManifestLog(PythonFSLogStore(path))
     v = committer.latest()
     w2.commit([], 5)
     assert committer.latest() == v

@@ -200,12 +200,9 @@ def test_object_store_colliding_deletes_serialize(spark, tmp_path):
 
 def test_native_committer_over_object_store(spark, tmp_path):
     """The plain-Python committer (native writer path) speaks the same
-    object-store protocol: commits through _LocalCommitter(log=...)
-    are read back by TableLog on the same store."""
-    from aoseventstreamer_spark.sources.tablelog_source import (
-        _LocalCommitter,
-        _LocalManifests,
-    )
+    object-store protocol: commits through ManifestLog(objlog) are
+    read back by TableLog on the same store."""
+    from aoseventstreamer_spark.tablelog import ManifestLog
 
     store = MemoryObjectStore()
     objlog = ObjectStoreLogStore(store)
@@ -221,7 +218,7 @@ def test_native_committer_over_object_store(spark, tmp_path):
     )
     shutil.move(f"{path}/stage/{part}", f"{path}/{part}")
     shutil.rmtree(f"{path}/stage")
-    committer = _LocalCommitter(path, log=objlog)
+    committer = ManifestLog(objlog)
     schema_json = json.loads(
         spark.range(10).select("id").schema.json()
     )
@@ -235,7 +232,7 @@ def test_native_committer_over_object_store(spark, tmp_path):
         expected_version=0,
     )
     assert v == 1
-    assert _LocalManifests(path, log=objlog).versions() == [1]
+    assert committer.log.versions() == [1]
     tl = TableLog(spark, path, log_store=objlog)
     assert tl.read().count() == 10
     assert store.conditional_puts >= 1  # the CAS really ran

@@ -18,11 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from aoseventstreamer_spark.tablelog import (
-    CommitConflict,
-    TableLog,
-    TableLogStream,
-)
+from aoseventstreamer_spark.tablelog import CommitConflict, TableLog
 
 
 def _rows(df):
@@ -199,73 +195,46 @@ def test_vacuum_drops_only_unreferenced_old_files(spark, tmp_path):
 # ---------- streaming: the exactly-once inversion ----------
 
 
-def test_stream_delivers_each_append_once(spark, tmp_path):
+def test_stream_delivers_each_append_once(spark, tmp_path, tablelog_tail):
     log = _mk(spark, tmp_path)
-    stream = TableLogStream(spark, log.path, str(tmp_path / "ck"))
-    got: list[int] = []
-
-    def deliver(frm, to, df):
-        got.extend(r.id for r in df.collect())
-
     log.append(spark.range(10).select("id"))
-    assert stream.run_once(deliver) is True
+    off, rows = tablelog_tail(log.path)
+    got = [r["id"] for r in rows]
     log.append(spark.range(10, 25).select("id"))
-    assert stream.run_once(deliver) is True
-    assert stream.run_once(deliver) is False  # nothing pending
+    off, rows = tablelog_tail(log.path, off)
+    got += [r["id"] for r in rows]
+    assert tablelog_tail(log.path, off) == (off, [])  # nothing pending
     assert sorted(got) == list(range(25))
 
 
-def test_compaction_during_live_tail_redelivers_nothing(spark, tmp_path):
+def test_compaction_during_live_tail_redelivers_nothing(
+    spark, tmp_path, tablelog_tail
+):
     """THE inversion: kill the tail, OPTIMIZE the consumed region,
-    restart — zero duplicates, and rows appended after the restart
-    still arrive exactly once."""
+    restart from the stored offset — zero duplicates, and rows
+    appended after the restart still arrive exactly once."""
     log = _mk(spark, tmp_path)
-    ck = str(tmp_path / "ck")
-    delivered: list[int] = []
-
-    def deliver(frm, to, df):
-        delivered.extend(r.id for r in df.collect())
-
     # phase 1: many small appends, consumed by the tail
     for i in range(5):
         log.append(spark.range(i * 10, i * 10 + 10).select("id").repartition(3))
-    stream = TableLogStream(spark, log.path, ck)
-    stream.run_once(deliver)
+    off, rows = tablelog_tail(log.path)
+    delivered = [r["id"] for r in rows]
     assert sorted(delivered) == list(range(50))
-    del stream  # kill the tail (position checkpoint persisted)
 
     # phase 2: compact the fully-consumed region
     rep = log.optimize(min_files=2)
     assert rep["files_removed"] > 0
 
-    # phase 3: restart the tail from the checkpoint; then new data
-    stream2 = TableLogStream(spark, log.path, ck)
-    advanced = stream2.run_once(deliver)
-    # the optimize snapshot advances the position but delivers no rows
-    assert sorted(delivered) == list(range(50)), "compaction re-delivered rows"
+    # phase 3: restart the tail from its offset; then new data
+    off2, rows = tablelog_tail(log.path, off)
+    # the optimize snapshot advances the offset but delivers no rows
+    assert off2["version"] > off["version"]
+    assert rows == [], "compaction re-delivered rows"
     log.append(spark.range(50, 60).select("id"))
-    stream2.run_once(deliver)
+    _, rows = tablelog_tail(log.path, off2)
+    delivered += [r["id"] for r in rows]
     assert sorted(delivered) == list(range(60))
     assert len(delivered) == 60  # exactly once, no duplicates at all
-
-
-def test_file_stream_vs_tablelog_stream_contrast(spark, tmp_path):
-    """The r7 hazard and its inversion side by side: same compaction,
-    the path-checkpoint file source re-delivers, the snapshot stream
-    does not. (The file-source half mirrors
-    test_compaction_makes_live_file_stream_redeliver.)"""
-    log = _mk(spark, tmp_path)
-    for i in range(4):
-        log.append(spark.range(i * 5, i * 5 + 5).select("id").repartition(2))
-    ck = str(tmp_path / "snapck")
-    got: list[int] = []
-    stream = TableLogStream(spark, log.path, ck)
-    stream.run_once(lambda f, t, df: got.extend(r.id for r in df.collect()))
-    assert len(got) == 20
-    log.optimize(min_files=1)
-    stream2 = TableLogStream(spark, log.path, ck)
-    stream2.run_once(lambda f, t, df: got.extend(r.id for r in df.collect()))
-    assert len(got) == 20  # nothing re-delivered
 
 
 # ---------- parity through the format ----------

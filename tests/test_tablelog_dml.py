@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from aoseventstreamer_spark.tablelog import TableLog, TableLogStream
+from aoseventstreamer_spark.tablelog import TableLog
 
 
 def _rows(df):
@@ -165,24 +165,6 @@ def test_merge_partitioned_preserves_layout(spark, tmp_path):
 
 
 # ---------- stream contract under DML ----------
-
-
-def test_stream_refuses_data_change_remove(spark, tmp_path):
-    log = _ranged(spark, str(tmp_path / "sr"), n_appends=2)
-    stream = TableLogStream(spark, log.path, str(tmp_path / "ck_sr"))
-    got = []
-    stream.run_once(lambda a, b, df: got.extend(r.id for r in df.collect()))
-    assert len(got) == 100
-    log.delete_where([("id", "<", 10)])
-    with pytest.raises(ValueError, match="data-change remove"):
-        stream.run_once(lambda a, b, df: None)
-    # ignore_changes: rewritten file re-delivers its survivors
-    relaxed = TableLogStream(
-        spark, log.path, str(tmp_path / "ck_sr"), ignore_changes=True
-    )
-    extra = []
-    relaxed.run_once(lambda a, b, df: extra.extend(r.id for r in df.collect()))
-    assert sorted(extra) == list(range(10, 50))  # survivors of the rewritten file
 
 
 def test_native_source_refuses_data_change_remove(spark, tmp_path):

@@ -16,7 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from aoseventstreamer_spark.tablelog import TableLog, TableLogStream
+from aoseventstreamer_spark.tablelog import TableLog
 
 
 def _rows(df):
@@ -156,21 +156,20 @@ def test_cow_dml_on_dv_table_does_not_resurrect(spark, tmp_path):
     assert got.filter((F.col("id") == 50) & (F.col("v") == 999)).count() == 1
 
 
-def test_stream_tail_refuses_dv_commit_then_ignore_changes(spark, tmp_path):
-    tbl, ck = str(tmp_path / "st"), str(tmp_path / "ck")
+def test_stream_tail_refuses_dv_commit_then_ignore_changes(
+    spark, tmp_path, tablelog_tail
+):
+    tbl = str(tmp_path / "st")
     log = _ranged(spark, tbl, n_appends=1)
-    stream = TableLogStream(spark, tbl, ck)
-    seen = []
-    stream.run_once(lambda f, t, df: seen.append(df.count()))
-    assert seen == [100]
+    off, rows = tablelog_tail(tbl)
+    assert len(rows) == 100
     log.delete_where([("id", "<", 40)], use_dv=True)
     with pytest.raises(ValueError, match="data-change remove"):
-        stream.run_once(lambda f, t, df: seen.append(df.count()))
-    # ignore_changes delivers the re-added file LOGICALLY (dv applied):
+        tablelog_tail(tbl, off)
+    # ignoreChanges delivers the re-added file LOGICALLY (dv applied):
     # the 60 survivors re-deliver, the deleted 40 never do
-    lax = TableLogStream(spark, tbl, ck, ignore_changes=True)
-    lax.run_once(lambda f, t, df: seen.append(df.count()))
-    assert seen == [100, 60]
+    _, rows = tablelog_tail(tbl, off, ignoreChanges=True)
+    assert sorted(r["id"] for r in rows) == list(range(40, 100))
 
 
 def test_vacuum_sweeps_unreferenced_dv_generations(spark, tmp_path):
@@ -189,21 +188,24 @@ def test_vacuum_sweeps_unreferenced_dv_generations(spark, tmp_path):
     assert log.read().count() == 80
 
 
-def test_snapshot_diff_stream_skips_dv_purge_optimize(spark, tmp_path):
+def test_snapshot_diff_stream_skips_dv_purge_optimize(
+    spark, tmp_path, tablelog_tail
+):
     """kill → dv delete consumed region → OPTIMIZE purge → restart:
     the layout-only purge commit stays invisible to the CDF-free
-    append count, completing the exactly-once story for dv tables."""
-    tbl, ck = str(tmp_path / "eo"), str(tmp_path / "ck")
+    append tail, completing the exactly-once story for dv tables."""
+    tbl = str(tmp_path / "eo")
     log = _ranged(spark, tbl, n_appends=1)
-    stream = TableLogStream(spark, tbl, ck, ignore_changes=True)
     seen = []
-    stream.run_once(lambda f, t, df: seen.append(df.count()))
+    off, rows = tablelog_tail(tbl, ignoreChanges=True)
+    seen.append(len(rows))
     log.delete_where([("id", "<", 50)], use_dv=True)
-    stream.run_once(lambda f, t, df: seen.append(df.count()))  # 50 survivors
+    off, rows = tablelog_tail(tbl, off, ignoreChanges=True)  # 50 survivors
+    seen.append(len(rows))
     log.optimize(min_files=1, small_file_bytes=1 << 30)  # purge, layout-only
-    delivered = stream.run_once(lambda f, t, df: seen.append(df.count()))
-    assert seen == [100, 50]  # the purge delivered NOTHING
-    assert delivered  # but the position advanced past it
+    end, rows = tablelog_tail(tbl, off, ignoreChanges=True)
+    assert seen == [100, 50] and rows == []  # the purge delivered NOTHING
+    assert end["version"] > off["version"]  # but the offset advanced past it
 
 
 # ---------- native data source sees dvs ----------

@@ -610,7 +610,8 @@ def test_mixed_committers_keep_pointer_coherent(spark, tmp_path):
     import os as _os
     import shutil as _shutil
 
-    from aoseventstreamer_spark.sources.tablelog_source import _LocalCommitter
+    from aoseventstreamer_spark.logstore import PythonFSLogStore
+    from aoseventstreamer_spark.tablelog import ManifestLog
 
     path = str(tmp_path / "mixed")
     log = TableLog(
@@ -620,7 +621,7 @@ def test_mixed_committers_keep_pointer_coherent(spark, tmp_path):
         log.append(spark.range(i * 5, i * 5 + 5).select("id").coalesce(1))
     assert log._log.read_pointer()["format"] == "parquet"
     # native committer appends v5, v6 (JSON checkpoint at v6)
-    committer = _LocalCommitter(path, checkpoint_interval=2)
+    committer = ManifestLog(PythonFSLogStore(path), checkpoint_interval=2)
     schema_json = _json.loads(spark.range(1).select("id").schema.json())
     for k in range(2):
         spark.range(100 + k * 5, 105 + k * 5).select("id").coalesce(
@@ -794,3 +795,96 @@ def test_cdf_stream_handles_array_columns(registered, tmp_path):
     dels = [g for g in got if g[2] == "delete"]
     assert sorted(g[0] for g in dels) == [15, 16, 17, 18, 19]
     assert all(g[1] == (g[0] * 2, g[0] * 3) for g in got)
+
+
+# ---------- the manifest core's range and cost contracts ----------
+
+
+def test_time_travel_past_the_head_is_refused(registered, tmp_path):
+    """A version past the head is refused, naming the head, by every
+    time-travel entry point: answering with the head snapshot would
+    hand the caller rows of a version it did not ask for."""
+    spark = registered
+    log = TableLog(spark, str(tmp_path / "ph"))
+    log.append(spark.range(4).select("id"))
+    log.append(spark.range(4, 10).select("id"))
+    head = "past the head of the log \\(latest version is 2\\)"
+    with pytest.raises(ValueError, match=head):
+        log.read(version=7)
+    with pytest.raises(ValueError, match=head):
+        log.snapshot_files(7)
+    with pytest.raises(ValueError, match=head):
+        log.read_changes(1, 7)
+    with pytest.raises(Exception, match=head):
+        spark.read.format("tablelog").option("snapshotVersion", 7).load(
+            log.path
+        ).collect()
+    # the head itself still reads, on both paths
+    assert log.read(version=2).count() == 10
+    assert log.read_changes(1, 2).count() == 6
+    assert spark.read.format("tablelog").option("snapshotVersion", 2).load(
+        log.path
+    ).count() == 10
+
+
+class _CountingStore:
+    """Wraps a LogStore and records each call made on it, with its
+    arguments; the store's own internal calls are not counted."""
+
+    def __init__(self, inner):
+        self._inner = inner
+        self.calls: list[tuple] = []
+
+    def __getattr__(self, name):
+        attr = getattr(self._inner, name)
+        if not callable(attr):
+            return attr
+
+        def counted(*args, **kw):
+            self.calls.append((name, *args))
+            return attr(*args, **kw)
+
+        return counted
+
+
+@pytest.mark.parametrize("cdf", [False, True])
+def test_stream_reader_hot_path_cost(spark, tmp_path, cdf):
+    """The live tail runs latestOffset and partitions on every trigger:
+    latestOffset is one fast_versions() call (no listing, no manifest
+    read), and partitions(start, end) reads exactly the manifests in
+    (start, end]."""
+    from aoseventstreamer_spark.logstore import PythonFSLogStore
+    from aoseventstreamer_spark.sources.tablelog_source import (
+        TableLogCDFStreamReader,
+        TableLogStreamReader,
+    )
+    from aoseventstreamer_spark.tablelog import ManifestLog
+
+    path = str(tmp_path / "hot")
+    log = TableLog(spark, path, checkpoint_interval=3)
+    for i in range(7):  # checkpoints at 3 and 6; the pointer names 6
+        log.append(spark.createDataFrame([(i,)], "id long"))
+    store = _CountingStore(PythonFSLogStore(path))
+    schema = log.schema()
+    reader = (
+        TableLogCDFStreamReader(path, schema, 0)
+        if cdf
+        else TableLogStreamReader(path, schema, 0)
+    )
+    reader.man = ManifestLog(store)
+
+    assert reader.latestOffset() == {"version": 7}
+    assert store.calls == [("fast_versions",)]
+
+    store.calls.clear()  # the tail: one fast list, one manifest read
+    assert len(reader.partitions({"version": 6}, {"version": 7})) == 1
+    assert store.calls == [("fast_versions",), ("read", 7)]
+
+    store.calls.clear()  # catch-up below the pointer lists in full once
+    assert len(reader.partitions({"version": 2}, {"version": 6})) == 4
+    assert [c for c in store.calls if c[0] == "read"] == [
+        ("read", v) for v in (3, 4, 5, 6)
+    ]
+    assert [c[0] for c in store.calls if c[0] != "read"] == [
+        "fast_versions", "versions",
+    ]

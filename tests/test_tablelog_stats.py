@@ -237,17 +237,14 @@ def test_cluster_by_makes_pruning_effective(spark, tmp_path):
     )
 
 
-def test_cluster_by_is_invisible_to_stream(spark, tmp_path):
-    from aoseventstreamer_spark.tablelog import TableLogStream
-
+def test_cluster_by_is_invisible_to_stream(spark, tmp_path, tablelog_tail):
     log = _shuffled_table(spark, str(tmp_path / "cs"), n_appends=2, rows_per=50)
-    stream = TableLogStream(spark, log.path, str(tmp_path / "ck_cs"))
-    got = []
-    stream.run_once(lambda a, b, df: got.extend(r.id for r in df.collect()))
-    assert len(got) == 100
+    off, rows = tablelog_tail(log.path)
+    assert len(rows) == 100
     log.optimize(cluster_by=["id"], target_file_bytes=2048)
-    assert stream.run_once(lambda a, b, df: got.extend([None] * df.count()))
-    assert len(got) == 100, "clustering rewrite must not re-deliver"
+    end, rows = tablelog_tail(log.path, off)
+    assert end["version"] > off["version"]
+    assert rows == [], "clustering rewrite must not re-deliver"
 
 
 def test_zorder_prunes_on_both_columns(spark, tmp_path):

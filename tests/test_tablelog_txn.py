@@ -324,83 +324,62 @@ def test_cdf_range_spans_multiple_commits(spark, tmp_path):
 
 # ---------- CDF streaming tail + incremental view maintenance ----------
 
-from aoseventstreamer_spark.tablelog import (  # noqa: E402
-    TableLogChangeStream,
-    apply_count_delta,
-)
+from aoseventstreamer_spark.tablelog import apply_count_delta  # noqa: E402
 
 
-def _collect_changes(stream):
-    out = {}
-
-    def deliver(frm, to, df):
-        out["df"] = df
-        out["range"] = (frm, to)
-
-    delivered = stream.run_once(deliver)
-    return delivered, out
-
-
-def test_change_stream_consumes_dml(spark, tmp_path):
-    """The CDF tail delivers row-level deltas across DELETE/UPDATE —
-    the commits the append-only tail refuses."""
+def test_change_stream_consumes_dml(spark, tmp_path, tablelog_tail):
+    """The readChangeFeed tail delivers row-level deltas across
+    DELETE/UPDATE — the commits the append-only tail refuses."""
     log = _ranged(spark, str(tmp_path / "cs"))
-    stream = TableLogChangeStream(
-        spark, log.path, str(tmp_path / "cs_ckpt")
-    )
-    delivered, out = _collect_changes(stream)
-    assert delivered
-    ins = out["df"].filter(F.col("_change_type") == "insert")
-    assert ins.count() == 200  # the initial appends are pure inserts
+    off, rows = tablelog_tail(log.path, readChangeFeed=True)
+    assert len(rows) == 200  # the initial appends are pure inserts
+    assert {r["_change_type"] for r in rows} == {"insert"}
 
     log.delete_where([("id", ">=", 60), ("id", "<", 80)])
     log.update_where([("id", "=", 5)], {"v": "v + 100"})
-    delivered, out = _collect_changes(stream)
-    assert delivered
-    ch = out["df"]
+    off, rows = tablelog_tail(log.path, off, readChangeFeed=True)
     assert sorted(
-        r.id for r in ch.filter(F.col("_change_type") == "delete").collect()
+        r["id"] for r in rows if r["_change_type"] == "delete"
     ) == [5] + list(range(60, 80))
-    ups = ch.filter(F.col("_change_type") == "insert").collect()
-    assert len(ups) == 1 and ups[0].id == 5 and ups[0].v == 100
+    ups = [r for r in rows if r["_change_type"] == "insert"]
+    assert len(ups) == 1 and ups[0]["id"] == 5 and ups[0]["v"] == 100
 
-    # nothing pending → no delivery, position stable
-    delivered, _ = _collect_changes(stream)
-    assert not delivered
+    # nothing pending → no delivery, offset stable
+    assert tablelog_tail(log.path, off, readChangeFeed=True) == (off, [])
 
 
-def test_change_stream_skips_layout_only_commits(spark, tmp_path):
+def test_change_stream_skips_layout_only_commits(spark, tmp_path, tablelog_tail):
     log = TableLog(spark, str(tmp_path / "cl"))
     for i in range(6):
         log.append(spark.range(i * 5, i * 5 + 5).coalesce(1))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "cl_ckpt"))
-    _collect_changes(stream)  # drain the appends
+    off, _ = tablelog_tail(log.path, readChangeFeed=True)  # drain the appends
     res = log.optimize(min_files=2, small_file_bytes=10**9)
     assert res["files_removed"] > 0
-    delivered, out = _collect_changes(stream)
-    assert delivered and "df" not in out  # position advanced, no rows
+    end, rows = tablelog_tail(log.path, off, readChangeFeed=True)
+    assert end["version"] > off["version"] and rows == []  # advanced, no rows
+
+
+def _last_commit_changes(log):
+    """The change feed of the newest commit, the unit the folds below
+    apply (queries/versioning_pack.py folds the same way)."""
+    v = log.latest_version()
+    return log.read_changes(v - 1, v)
 
 
 def test_incremental_view_tracks_batch_groupby(spark, tmp_path):
-    """apply_count_delta folded over the CDF tail equals a fresh
-    groupBy-count of the table after every kind of commit."""
+    """apply_count_delta folded over each commit's change feed equals
+    a fresh groupBy-count of the table after every kind of commit."""
     log = TableLog(spark, str(tmp_path / "iv"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "iv_ckpt"))
     state = None
 
     def fold():
         nonlocal state
-
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_count_delta(state, df, ["v"])
-            state = spark.createDataFrame(
-                state.collect(), state.schema
-            )  # pin (a real consumer checkpoints state between batches)
-
-        stream.run_once(deliver)
+        state = apply_count_delta(state, _last_commit_changes(log), ["v"])
+        state = spark.createDataFrame(
+            state.collect(), state.schema
+        )  # pin (a real consumer checkpoints state between batches)
         want = _rows(log.read().groupBy("v").count().withColumnRenamed("count", "n"))
-        got = _rows(state) if state is not None else []
+        got = _rows(state)
         assert got == want, f"state diverged: {got} != {want}"
 
     log.append(
@@ -463,25 +442,21 @@ def test_history_labels_every_write_path(spark, tmp_path):
 
 
 def test_incremental_sum_view_tracks_batch_groupby(spark, tmp_path):
-    """apply_agg_delta (COUNT + SUM) folded over the CDF tail equals a
-    fresh groupBy agg after append / dv-DELETE / dv-UPDATE — the
-    update's delete+insert pair must net the value difference
-    exactly."""
+    """apply_agg_delta (COUNT + SUM) folded over each commit's change
+    feed equals a fresh groupBy agg after append / dv-DELETE /
+    dv-UPDATE — the update's delete+insert pair must net the value
+    difference exactly."""
     from aoseventstreamer_spark.tablelog import apply_agg_delta
 
     log = TableLog(spark, str(tmp_path / "sv"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "sv_ckpt"))
     state = None
 
     def fold():
         nonlocal state
-
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_agg_delta(state, df, ["v"], {"amt": "amt_sum"})
-            state = spark.createDataFrame(state.collect(), state.schema)
-
-        stream.run_once(deliver)
+        state = apply_agg_delta(
+            state, _last_commit_changes(log), ["v"], {"amt": "amt_sum"}
+        )
+        state = spark.createDataFrame(state.collect(), state.schema)
         want = _rows(
             log.read()
             .groupBy("v")
@@ -490,7 +465,7 @@ def test_incremental_sum_view_tracks_batch_groupby(spark, tmp_path):
                 F.coalesce(F.sum("amt"), F.lit(0)).alias("amt_sum"),
             )
         )
-        got = _rows(state) if state is not None else []
+        got = _rows(state)
         assert got == want, f"state diverged: {got} != {want}"
 
     log.append(
@@ -511,13 +486,12 @@ def test_incremental_sum_view_tracks_batch_groupby(spark, tmp_path):
 
 
 def test_incremental_minmax_view_tracks_batch_groupby(spark, tmp_path):
-    """apply_minmax_delta folded over the CDF tail equals a fresh
-    groupBy COUNT/MIN/MAX after every DML kind; only extremum-deleting
-    batches trigger the bounded rescan."""
+    """apply_minmax_delta folded over each commit's change feed equals
+    a fresh groupBy COUNT/MIN/MAX after every DML kind; only
+    extremum-deleting batches trigger the bounded rescan."""
     from aoseventstreamer_spark.tablelog import apply_minmax_delta
 
     log = TableLog(spark, str(tmp_path / "mm"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "mm_ckpt"))
     state = None
     rescans = []
 
@@ -537,13 +511,10 @@ def test_incremental_minmax_view_tracks_batch_groupby(spark, tmp_path):
 
     def fold():
         nonlocal state
-
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_minmax_delta(state, df, ["v"], ["amt"], rescan)
-            state = spark.createDataFrame(state.collect(), state.schema)
-
-        stream.run_once(deliver)
+        state = apply_minmax_delta(
+            state, _last_commit_changes(log), ["v"], ["amt"], rescan
+        )
+        state = spark.createDataFrame(state.collect(), state.schema)
         want = _rows(
             log.read()
             .groupBy("v")
@@ -553,7 +524,7 @@ def test_incremental_minmax_view_tracks_batch_groupby(spark, tmp_path):
                 F.max("amt").alias("max_amt"),
             )
         )
-        got = _rows(state) if state is not None else []
+        got = _rows(state)
         assert got == want, f"state diverged: {got} != {want}"
 
     log.append(
@@ -596,7 +567,6 @@ def test_incremental_hll_view_matches_fresh_sketch(spark, tmp_path):
 
     P = 5
     log = TableLog(spark, str(tmp_path / "hv"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "hv_ckpt"))
     state = None
 
     def rescan(keys_df):
@@ -610,15 +580,12 @@ def test_incremental_hll_view_matches_fresh_sketch(spark, tmp_path):
 
     def fold():
         nonlocal state
-
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_hll_delta(state, df, ["v"], "uid", rescan, p=P)
-            state = spark.createDataFrame(state.collect(), state.schema)
-
-        stream.run_once(deliver)
+        state = apply_hll_delta(
+            state, _last_commit_changes(log), ["v"], "uid", rescan, p=P
+        )
+        state = spark.createDataFrame(state.collect(), state.schema)
         want = _rows(hll_sketch(log.read(), "uid", P, group_cols=["v"]))
-        got = _rows(state) if state is not None else []
+        got = _rows(state)
         assert got == want, f"registers diverged: {got} != {want}"
 
     log.append(
